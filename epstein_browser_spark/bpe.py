@@ -45,6 +45,8 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from epstein_browser_spark.session import spread
+
 SENT = "\x1f"  # symbol sentinel (unit separator); stripped from input
 EOW = "</w>"   # end-of-word symbol
 
@@ -123,11 +125,6 @@ def train_merges(df: DataFrame, text_col: str = "text",
                               n_merges)
 
 
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump([list(m) for m in merges], f, ensure_ascii=False)
-
-
 def load_merges(path: str) -> list[tuple[str, str]]:
     with open(path, encoding="utf-8") as f:
         return [tuple(m) for m in json.load(f)]
@@ -193,20 +190,19 @@ def doc_bpe_token_counts(df: DataFrame, merges: list[tuple[str, str]],
     the exploded occurrences — identical per-word counts, so identical
     per-doc sums, at ~|types|/|occurrences| (measured ~1/40) of the
     chain cost. The occurrence explode stays the doc-id-keyed partial
-    agg it was; the type table is repartitioned so the chain itself
-    spreads across cores (single-row-group inputs otherwise run it in
-    one task)."""
+    agg it was; the type table is spread so the chain itself runs on
+    every core."""
     from epstein_browser_spark.textstats import tokens
 
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    words = df.repartition(ncores).select(
+    words = spread(df).select(
         F.col(id_col).alias("id"),
         F.explode_outer(tokens(F.col(text_col))).alias("w"),
     )
     types = (
         words.filter(F.col("w").isNotNull())
         .select("w").distinct()
-        .repartition(ncores)
+        # post-aggregate: undoes AQE's coalescing of the distinct output
+        .transform(spread)
         .select("w", word_token_count_expr(F.col("w"), merges).alias("_tn"))
     )
     per_word = words.join(F.broadcast(types), "w", "left").select(

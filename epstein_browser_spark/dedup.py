@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from epstein_browser_spark.session import spread
 from epstein_browser_spark.textstats import (
     deterministic_split,
     exploded_shingles,
@@ -214,8 +215,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     """
     # distinct=False: per-permutation min() is duplicate-insensitive, so
     # the corpus-wide (id, shingle) dedup exchange is pure overhead (see
-    # minhash_features); spread so the explode isn't single-task
-    ex = exploded_shingles(df, text_col, id_col, n, spread=True,
+    # minhash_features)
+    ex = exploded_shingles(spread(df), text_col, id_col, n,
                            distinct=False).select(
         "id", F.xxhash64("_sh").alias("_h")
     )
@@ -582,10 +583,6 @@ def minhash_features(df: DataFrame, text_col: str = "text",
     LSH branch reads (id, sig), the verify branch (id, grams), and an
     incremental ingest appends new rows and probes old ones
     (minhash_candidates_between)."""
-    from epstein_browser_spark.textstats import exploded_shingles
-
-    # spread=True: the shingle explode is the dominant cost and must not
-    # run inside a single scan task (single-row-group inputs, guide §2.6).
     # distinct=False (guide §2.4 — remove shuffles outright): min() per
     # permutation is duplicate-insensitive and collect_set dedups in the
     # aggregation itself, so the up-front corpus-wide (id, shingle)
@@ -593,8 +590,8 @@ def minhash_features(df: DataFrame, text_col: str = "text",
     # aggregation collapses each doc's shingles BEFORE the exchange
     # (explode keeps a doc's rows in one partition) and the only wide
     # shuffle left carries ~one row per doc.
-    ex = exploded_shingles(df, text_col, id_col, shingle,
-                           spread=True, distinct=False).withColumn(
+    ex = exploded_shingles(spread(df), text_col, id_col, shingle,
+                           distinct=False).withColumn(
         "_h", F.xxhash64("_sh")
     )
     # base-hash once per shingle; per-permutation re-hash is fixed-width
@@ -637,7 +634,7 @@ def minhash_dedup_pairs_md5(
     # distinct=False + collect_set: the md5 min is duplicate-insensitive
     # and the set collect dedups in the aggregate — same values, one
     # fewer corpus-wide exchange (see minhash_features)
-    ex = exploded_shingles(df, text_col, id_col, shingle, spread=True,
+    ex = exploded_shingles(spread(df), text_col, id_col, shingle,
                            distinct=False)
     aggs = [
         F.min(F.md5(F.concat(F.col("_sh"), F.lit(f":{i}")))).alias(f"_h{i}")

@@ -27,26 +27,11 @@ from epstein_browser_spark.core.quality import (
 )
 from epstein_browser_spark.ordering import with_navigation
 from epstein_browser_spark.pipeline import extract_transcripts
+from epstein_browser_spark.session import spread
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the frame across the session's shuffle-partition count.
-
-    The driver's test tables are single-row-group parquet files, so a
-    scan yields ONE input split no matter what
-    ``spark.sql.files.maxPartitionBytes`` says — every per-row-heavy
-    map stage (regex counts, shingle explodes, merge chains) otherwise
-    runs serially in that one task (guide §2.6 stragglers / §6 input
-    splits). Applied ONLY in queries whose scan-stage work dominates;
-    derived from the session's core count, never a constant, so the
-    same code is right at any parallelism. On a real multi-file table
-    the exchange is redundant but proportionally tiny."""
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(ncores)
 
 
 # ---------------------------------------------------------------------------
@@ -792,7 +777,7 @@ FROM b ORDER BY {cos} DESC, vec_id ASC LIMIT 10
 
 def q24_token_stats(spark, sf_dir):
     """Token counting + quality ratios (training-data curation stats)."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     c = F.col("text")
     toks = textstats.tokens(c)
     return d.select(
@@ -831,7 +816,7 @@ FROM documents
 
 def q25_langid(spark, sf_dir):
     """Marker-word language-ID heuristic, JVM expressions only."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return d.select(
         "doc_id", "lang",
         textstats.predicted_lang(F.col("text")).alias("predicted_lang"),
@@ -2701,7 +2686,7 @@ def q70_chunking(spark, sf_dir):
     chunk starts via ``sequence`` with the stride as step, explode, slice
     + rejoin — no UDF, output rows ∝ tokens/stride. Documents shorter
     than one window become a single chunk."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     window, stride = 64, 48  # 16-token overlap
     toks = d.select(
         "doc_id", textstats.tokens(F.lower(F.col("text"))).alias("_toks")
@@ -2771,7 +2756,7 @@ def q71_boilerplate_lines(spark, sf_dir):
     because boilerplate repeats as a phrase inside otherwise-distinct
     documents. One tokenize + explode + per-doc distinct, one groupBy on
     the segment; output bounded by the distinct-common-segment count."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     stats = d.agg(F.count("*").alias("n_docs"))
     toks = d.select(
         "doc_id", textstats.tokens(F.lower(F.col("text"))).alias("_toks")
@@ -3172,7 +3157,7 @@ def q77_tfidf_topk(spark, sf_dir):
     count over the term partition — the corpus-sized vocabulary is never
     broadcast or collected; ranking uses the 6dp-rounded score + term so
     top-k boundaries agree cross-engine."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     out = textstats.tfidf_top_terms(d, "text", "doc_id", k=3)
     return out.select(
         F.col("id").alias("doc_id"), "term",
@@ -4306,7 +4291,7 @@ def q101_boilerplate_strip(spark, sf_dir):
     the census alone never changes the training set. One tokenize, one
     segment explode, a partial-agg census, one shuffle join back, one
     per-doc re-assembly groupBy."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return textstats.strip_boilerplate(d).withColumnRenamed("id", "doc_id")
 
 
@@ -4358,7 +4343,7 @@ def q102_token_entropy(spark, sf_dir):
     which shuffled-boilerplate spam evades. Integer micro-nat exactness
     throughout (the q79/q84 discipline): the per-type term sum is an
     exact integer, so no float summation order anywhere."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return textstats.token_entropy(d).withColumnRenamed("id", "doc_id")
 
 
@@ -4573,7 +4558,7 @@ def q106_vocab_growth(spark, sf_dir):
     no raw-row window, so no per-source sort shuffle at 10^12 rows;
     the only corpus-wide shuffle is the (source, token) first-
     appearance partial agg."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return textstats.vocab_growth(d).withColumnRenamed("grp", "source")
 
 
@@ -4617,7 +4602,7 @@ def q107_unigram_kl(spark, sf_dir):
     q79/q102 discipline) with a decimal(38,0) term sum — at 10^12
     tokens a per-type term passes bigint range; only the final /N_g
     rescale is floating-point."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return textstats.unigram_kl(d).withColumnRenamed("grp", "source")
 
 
@@ -4785,7 +4770,7 @@ def q110_source_overlap(spark, sf_dir):
     summation order differs between engines). Two broadcast joins of
     the |docs|-row (id, source) projection onto the pair set, one
     partial-agg groupBy on the source pair."""
-    d = _spread(_t(spark, sf_dir, "documents")).filter(F.col("doc_id") < 200)
+    d = spread(_t(spark, sf_dir, "documents")).filter(F.col("doc_id") < 200)
     pairs = dedup.ngram_jaccard_pairs(d, n=3, threshold=0.5)
     meta = d.select("doc_id", "source")
     j = (
@@ -5241,7 +5226,7 @@ def q118_code_detect(spark, sf_dir):
     become a three-line function body derived from doc_id, reproduced
     verbatim in the oracle — both classes populated, and the organic
     rows exercise the all-zero signal path."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     i = F.col("doc_id").cast("string")
     code = F.concat(
         F.lit("def f_"), i, F.lit("(x):\n    y = x + "), i,
@@ -6546,7 +6531,7 @@ def q139_edit_near_dups(spark, sf_dir):
     corpus-sized. Exact-dup pairs (dist 0) are excluded — that family
     is q18's."""
     d = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"))
         .select("doc_id", "text", "n_chars")
         .filter(F.col("text").rlike("^[\\x00-\\x7F]*$"))
     )
@@ -6984,7 +6969,7 @@ def q144_hll_customers(spark, sf_dir):
     p against."""
     from epstein_browser_spark import sketches
 
-    o = _spread(_t(spark, sf_dir, "orders"))
+    o = spread(_t(spark, sf_dir, "orders"))
     return sketches.hll_distinct(
         o, ["o_orderstatus"], "o_custkey", seed="hll0"
     ).orderBy("o_orderstatus")
@@ -7042,7 +7027,7 @@ def q145_cms_heavyhitters(spark, sf_dir):
     no floats anywhere."""
     from epstein_browser_spark import sketches
 
-    o = _spread(_t(spark, sf_dir, "orders"))
+    o = spread(_t(spark, sf_dir, "orders"))
     keys = o.select(F.col("o_custkey").cast("string").alias("k"))
     exact = (
         keys.groupBy("k")
@@ -7114,7 +7099,7 @@ def q146_doc_skyline(spark, sf_dir):
     Oracle is the O(n²) NOT EXISTS dominance restatement."""
     from epstein_browser_spark import sketches
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     pts = d.select(
         "doc_id",
         (-F.col("n_chars")).alias("neg_chars"),
@@ -7323,7 +7308,7 @@ def q147_bloom_semijoin(spark, sf_dir):
     from epstein_browser_spark import sketches
 
     cust = _t(spark, sf_dir, "customer")
-    orders = _spread(_t(spark, sf_dir, "orders"))
+    orders = spread(_t(spark, sf_dir, "orders"))
     dim = cust.filter(F.col("c_acctbal") > 9000).select("c_custkey")
     dim_pos = dim.select(
         F.explode(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from epstein_browser_spark.session import spread
+
 
 def dot(a: Column, b: Column) -> Column:
     # cast operands (not the product) to double: float32 multiply then
@@ -437,7 +439,7 @@ def _centroids(embeddings: DataFrame, n_centroids: int, id_col: str,
 def ivf_assign(embeddings: DataFrame, n_centroids: int = 16,
                id_col: str = "vec_id", vec_col: str = "embedding",
                quantizer: str = "rank", n_iters: int = 5,
-               dim: int | None = None, spread: bool = False) -> DataFrame:
+               dim: int | None = None) -> DataFrame:
     """(id_col…, cell) — nearest centroid by squared L2, ties to the lower
     centroid id. The centroid table is tiny and broadcast; per vector the
     candidate rows are n_centroids wide, then a min + equality join-back
@@ -451,16 +453,9 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int = 16,
     deterministic seed); default 'rank' keeps the sampled quantizer.
 
     ``dim``, when known, switches the per-pair dot to the unrolled
-    codegen form (bit-identical fold). ``spread=True`` round-robin
-    repartitions the corpus to the core count first — the sf1.0 input is
-    a single parquet row group, so without it every per-row assignment
-    pass runs in ONE scan task (guide §2.6 stragglers / §6 input
-    splits); assignment and the Lloyd updates are order-independent, so
-    the result is partitioning-invariant (pinned by tests)."""
-    if spread:
-        ncores = int(embeddings.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        embeddings = embeddings.repartition(ncores)
+    codegen form (bit-identical fold). Assignment and the Lloyd updates
+    are order-independent, so the result is partitioning-invariant
+    (pinned by tests)."""
     cents = _centroids(embeddings, n_centroids, id_col, vec_col,
                        quantizer, n_iters)
     if quantizer == "kmeans":
@@ -534,12 +529,8 @@ def ivf_topk(
     qlist = [float(x) for x in query_vec]
     dim = len(qlist)
     q = F.array(*[F.lit(x) for x in qlist])
-    ncores = int(embeddings.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    # single-row-group inputs otherwise run every per-row assignment pass
-    # in ONE scan task (guide §2.6/§6); assignment is order-independent
-    spread = embeddings.repartition(ncores)
-    cents = _centroids(spread, n_centroids, id_col, vec_col,
+    emb = spread(embeddings)  # assignment is order-independent
+    cents = _centroids(emb, n_centroids, id_col, vec_col,
                        quantizer, n_iters)
     if quantizer == "kmeans":
         # learned centroids are computed ONCE on the driver and reused
@@ -549,7 +540,7 @@ def ivf_topk(
     # both quantizers assign against the SAME cents frame — the rank
     # branch used to rebuild the centroid scan inside ivf_assign, putting
     # the orderBy+limit corpus scan in the plan twice (r4 review)
-    assigned = _assign_to(spread, cents, id_col, vec_col, dim=dim)
+    assigned = _assign_to(emb, cents, id_col, vec_col, dim=dim)
     qcells = (
         cents.select("cid", dist2(q, F.col("cvec")).alias("_d"))
         .orderBy(F.asc("_d"), F.asc("cid"))
@@ -744,9 +735,7 @@ def pq_encode(embeddings: DataFrame, m: int = 4, k: int = 16,
         cb = pq_codebooks(embeddings, m, k, id_col, vec_col)
     else:
         _check_corpus_dim(embeddings, vec_col, m)
-    ncores = int(embeddings.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    subv = _subvectors(embeddings.repartition(ncores), m, id_col, vec_col)
+    subv = _subvectors(spread(embeddings), m, id_col, vec_col)
     # same argmin-under-constant-shift trick as ivf_assign: |s|² is
     # constant per (id, sub), so only c·c (projected on the m·k-row
     # broadcast side) and s·c (ONE fold per pair) are evaluated; with a
@@ -876,14 +865,12 @@ def ivf_pq_topk(embeddings: DataFrame, query_vec: list[float],
     has no guaranteed fold order across engines)."""
     _check_pq_dims(query_vec, m)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    ncores = int(embeddings.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    spread = embeddings.repartition(ncores)
-    cents = _centroids(spread, n_centroids, id_col, vec_col,
+    emb = spread(embeddings)
+    cents = _centroids(emb, n_centroids, id_col, vec_col,
                        quantizer, n_iters)
     if quantizer == "kmeans":
         cents = cents.localCheckpoint(eager=True)
-    assigned = _assign_to(spread, cents, id_col, vec_col,
+    assigned = _assign_to(emb, cents, id_col, vec_col,
                           dim=len(query_vec))
     qcells = (
         cents.select("cid", dist2(q, F.col("cvec")).alias("_d"))
@@ -895,9 +882,9 @@ def ivf_pq_topk(embeddings: DataFrame, query_vec: list[float],
         F.broadcast(qcells), F.col("cell") == F.col("q_cell")
     ).select(id_col)
 
-    cb = _pq_books(spread, m, k, id_col, vec_col, quantizer, n_iters)
+    cb = _pq_books(emb, m, k, id_col, vec_col, quantizer, n_iters)
     table = _adc_table(cb, query_vec, m)
-    codes = pq_encode(spread, m, k, id_col, vec_col, long_form=True,
+    codes = pq_encode(emb, m, k, id_col, vec_col, long_form=True,
                       cb=cb, dim=len(query_vec))
     return (
         codes.join(cell_ids, id_col, "left_semi")
@@ -951,20 +938,15 @@ def semdedup(embeddings: DataFrame, n_centroids: int = 8,
     # so the flag set is identical.
     pair_dot = ((lambda x, y: dot_fixed(x, y, dim)) if dim is not None
                 else dot)
-    # the repartition BEFORE the checkpoint pins the checkpointed RDD at
-    # the core count: AQE otherwise coalesces the small aggregate output
-    # to a handful of partitions, and since the checkpoint freezes that
-    # layout, the pair-verify stage would be capped at that many tasks
-    ncores = int(embeddings.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
     assigned = (
-        ivf_assign(embeddings, n_centroids, id_col, vec_col,
-                   quantizer, n_iters, dim=dim, spread=True)
+        ivf_assign(spread(embeddings), n_centroids, id_col, vec_col,
+                   quantizer, n_iters, dim=dim)
         .select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("_v"), "cell",
             F.sqrt(pair_dot(F.col(vec_col), F.col(vec_col))).alias("_n"),
         )
-        .repartition(ncores)
+        # post-aggregate: else the checkpoint freezes AQE's coalesced layout
+        .transform(spread)
         .localCheckpoint(eager=True)
     )
     a = assigned.select(
@@ -1023,11 +1005,7 @@ def centroid_diversity(
     output is |groups| rows, nothing pairwise anywhere.
     """
     if dim is not None:
-        # spread BEFORE the per-row quantize/normalize transforms so they
-        # run on every core, not in the one scan task a single-row-group
-        # parquet file produces (guide §2.6/§6)
-        ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(ncores)
+        df = spread(df)
     q = F.transform(
         F.col(vec_col), lambda x: F.round(x * 1000000.0, 0).cast("long")
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from epstein_browser_spark.session import spread
+
 # tiny marker-word inventories for the n-gram/stopword language heuristic
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "is", "in", "that", "with"],
@@ -143,24 +145,8 @@ LANG_TRIGRAMS = {
 }
 
 
-def predicted_lang_ngram(col: Column, n: int = 3) -> Column:
-    """Char-n-gram-profile language ID: argmax over languages of the
-    overlap between the document's distinct trigram set and each
-    language's top-trigram profile; 'und' when nothing overlaps. The
-    profile arrays are plan literals; the whole heuristic is JVM set ops
-    (same sortable-string argmax trick as predicted_lang, so the
-    tie-break is deterministic and SQL-restatable)."""
-    grams = char_ngrams(col, n)
-    return _argmax_lang({
-        lang: F.size(
-            F.array_intersect(grams, F.array(*[F.lit(g) for g in profile]))
-        )
-        for lang, profile in LANG_TRIGRAMS.items()
-    })
-
-
 def langid_ngram_table(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n: int = 3) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """(id, predicted_lang) for a whole corpus.
 
     r6 shape (guide §2.4 — remove shuffles outright): a profile trigram
@@ -170,38 +156,15 @@ def langid_ngram_table(df: DataFrame, text_col: str = "text",
     codegen, ZERO shuffles — instead of the explode → distinct →
     collect_list → array_intersect chain (two corpus-wide exchanges of
     every character position, and a single-task explode on single-row-
-    group inputs). Docs shorter than n chars get 'und' on both paths
-    (a length-n gram cannot be contained in a shorter string). The
-    trigram profiles are 3-char by construction; a non-default ``n``
-    falls back to the set-intersect path, whose n-grams can only match
-    3-char profile entries when n == 3."""
-    if n != 3:
-        sets = shingle_sets(df, text_col, id_col, n)
-        grams = F.coalesce(
-            F.col("grams"), F.array().cast("array<string>")
-        )
-        lang = _argmax_lang({
-            lg: F.size(
-                F.array_intersect(grams,
-                                  F.array(*[F.lit(g) for g in profile]))
-            )
-            for lg, profile in LANG_TRIGRAMS.items()
-        })
-        return (
-            df.select(F.col(id_col).alias("id"))
-            .join(sets, "id", "left")
-            .select("id", lang.alias("predicted_lang"))
-        )
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    group inputs). Docs shorter than 3 chars get 'und' (a trigram cannot
+    be contained in a shorter string)."""
     norm = F.lower(F.trim(F.col(text_col)))
     lang = _argmax_lang({
         lg: sum_profile_contains(norm, profile)
         for lg, profile in LANG_TRIGRAMS.items()
     })
-    # round-robin spread: single-row-group parquet otherwise runs the
-    # whole probe pass in one scan task (guide §2.6/§6)
-    return df.repartition(ncores).select(F.col(id_col).alias("id"),
-                                         lang.alias("predicted_lang"))
+    return spread(df).select(F.col(id_col).alias("id"),
+                             lang.alias("predicted_lang"))
 
 
 def sum_profile_contains(norm: Column, profile: list[str]) -> Column:
@@ -243,8 +206,7 @@ def deterministic_split(id_col: Column, train_pct: int = 80,
 
 
 def word_ngrams_exploded(df: DataFrame, text_col: str, id_col: str,
-                         n: int = 13, distinct: bool = True,
-                         spread: bool = False) -> DataFrame:
+                         n: int = 13, distinct: bool = True) -> DataFrame:
     """(id, gram) — one row per DISTINCT n-word window per doc (lowercased,
     whitespace-tokenized, single-space joined). The unit of benchmark
     decontamination: GPT-3/The-Pile-style filtering drops training docs
@@ -260,12 +222,7 @@ def word_ngrams_exploded(df: DataFrame, text_col: str, id_col: str,
     for consumers that immediately broadcast-join the grams against a
     tiny set and re-dedup with countDistinct, the up-front distinct
     shuffles the WHOLE exploded corpus to keep rows the join then drops
-    (guide §2.3: aggregate/filter before you shuffle). ``spread=True``
-    round-robins the input first so the explode doesn't run in one scan
-    task on single-row-group parquet."""
-    if spread:
-        ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(ncores)
+    (guide §2.3: aggregate/filter before you shuffle)."""
     norm = df.select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
@@ -297,8 +254,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     partial-aggregable, no corpus-wide state, joins back on doc id.
     Docs with fewer words than the gram width get count 0 / null gram.
     """
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    norm = df.repartition(ncores).select(
+    norm = spread(df).select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
     )
@@ -377,8 +333,8 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
     # drops almost every row map-side; countDistinct below re-dedups the
     # tiny survivor set). The old shape shuffled every exploded gram of
     # the corpus just to dedup rows the join then discarded.
-    cg = word_ngrams_exploded(corpus, text_col, id_col, n, distinct=False,
-                              spread=True)
+    cg = word_ngrams_exploded(spread(corpus), text_col, id_col, n,
+                              distinct=False)
     bg = word_ngrams_exploded(benchmark, text_col, id_col, n).select(
         F.col("id").alias("bench_id"), "gram"
     )
@@ -419,8 +375,8 @@ def eval_containment(corpus: DataFrame, benchmark: DataFrame,
     # and countDistinct re-dedups the survivors per (doc, item) pair;
     # the old shape paid a corpus-wide (id, gram) dedup exchange first
     # (guide §2.3: filter before you shuffle)
-    cg = word_ngrams_exploded(corpus, text_col, id_col, n, distinct=False,
-                              spread=True)
+    cg = word_ngrams_exploded(spread(corpus), text_col, id_col, n,
+                              distinct=False)
     bg = word_ngrams_exploded(benchmark, text_col, id_col, n).select(
         F.col("id").alias("bench_id"), "gram")
     btot = bg.groupBy("bench_id").agg(F.count("*").alias("_nb"))
@@ -458,8 +414,7 @@ def ngram_novelty(df: DataFrame, text_col: str = "text",
     over the (tiny) unique-gram set. One corpus-wide exchange total
     (the gram census, partial-aggable) instead of distinct + census +
     co-keyed join + per-doc reduce."""
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    norm = df.repartition(ncores).select(
+    norm = spread(df).select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
     ).filter(F.size("_toks") >= n)
@@ -575,8 +530,7 @@ def fingerprint(col: Column, n: int = 4) -> Column:
 
 
 def exploded_shingles(df: DataFrame, text_col: str, id_col: str,
-                      n: int, spread: bool = False,
-                      distinct: bool = True) -> DataFrame:
+                      n: int, distinct: bool = True) -> DataFrame:
     """(id, _sh) — one row per distinct char n-gram shingle per doc.
 
     The normalized string is materialized in a projection *below* the
@@ -587,15 +541,10 @@ def exploded_shingles(df: DataFrame, text_col: str, id_col: str,
     shape is the scale path for all shingle consumers (minhash, simhash,
     fingerprints).
 
-    ``spread=True`` round-robins the docs first so the explode isn't
-    serialized into the one scan task a single-row-group parquet file
-    produces (guide §2.6/§6). ``distinct=False`` skips the corpus-wide
-    (id, _sh) dedup exchange for consumers whose downstream aggregation
-    is duplicate-insensitive (min-hash, collect_set) — guide §2.3/§2.4.
+    ``distinct=False`` skips the corpus-wide (id, _sh) dedup exchange for
+    consumers whose downstream aggregation is duplicate-insensitive
+    (min-hash, collect_set) — guide §2.3/§2.4.
     """
-    if spread:
-        ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(ncores)
     norm = df.select(
         F.col(id_col).alias("id"),
         F.lower(F.trim(F.col(text_col))).alias("_norm"),
@@ -637,11 +586,10 @@ def fingerprint_table(df: DataFrame, text_col: str = "text",
     group inputs. Set equality: both enumerate every i in
     [1, len−n+1] → substring(i, n); a doc shorter than n yields no
     lookahead match → empty array → concat_ws('') = '' → md5('')."""
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     norm = F.lower(F.trim(F.col(text_col)))
     grams = F.regexp_extract_all(norm, F.lit(r"(?s)(?=(." + "{%d}" % n + "))"),
                                  1)
-    return df.repartition(ncores).select(
+    return spread(df).select(
         F.col(id_col).alias("id"),
         F.md5(
             F.concat_ws("", F.array_sort(F.array_distinct(grams)))
@@ -781,13 +729,11 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame,
     reduce to ≤ ``n_buckets`` rows (partial-agg shuffles), the log-ratio
     table broadcasts, and the per-doc sum is one more partial-agg
     groupBy. Nothing quadratic, nothing driver-side."""
-    ncores = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     def feats(d: DataFrame) -> DataFrame:
         # explode first (generators can't nest inside expressions), then
-        # hash the term to its bucket; spread so the per-term md5 work
-        # never runs in one scan task (single-row-group inputs)
-        terms = d.repartition(ncores).select(
+        # hash the term to its bucket
+        terms = spread(d).select(
             F.col(id_col).alias("id"),
             F.explode(
                 F.filter(F.split(F.lower(F.col(text_col)), "[^a-z]+"),
@@ -877,8 +823,7 @@ def dup_spans(df: DataFrame, text_col: str = "text",
     the output."""
     from pyspark.sql.window import Window
 
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    toks = df.repartition(ncores).select(
+    toks = spread(df).select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
     ).filter(F.size("_toks") >= n).localCheckpoint(eager=True)
@@ -939,8 +884,7 @@ def lm_perplexity(df: DataFrame, text_col: str = "text",
     a bigint sum overflows ANSI arithmetic."""
     from pyspark.sql.window import Window
 
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    toks0 = df.repartition(ncores).select(
+    toks0 = spread(df).select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
     )
@@ -1035,10 +979,9 @@ def nb_quality_scores(corpus: DataFrame, labeled: DataFrame,
     bounded broadcast, and scoring is one partial-agg groupBy over the
     corpus features. Nothing quadratic, nothing driver-side."""
     spark = corpus.sparkSession
-    ncores = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def feats(d: DataFrame, extra: tuple = ()) -> DataFrame:
-        terms = d.repartition(ncores).select(
+        terms = spread(d).select(
             F.col(id_col).alias("id"),
             *[F.col(c) for c in extra],
             F.explode(
@@ -1536,8 +1479,7 @@ def vocab_growth(df: DataFrame, text_col: str = "text",
 
 
 def chunk_langid(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", chunk_words: int = 40,
-                 n: int = 3) -> DataFrame:
+                 id_col: str = "doc_id", chunk_words: int = 40) -> DataFrame:
     """Per-chunk language ID + per-document code-switch report — the
     document-granularity langid (q51) votes once, so a half-English
     half-German page passes an 'en' filter with the German half intact;
@@ -1551,14 +1493,14 @@ def chunk_langid(df: DataFrame, text_col: str = "text",
     agreement = majority chunks / all chunks, distinct real (non-'und')
     languages, and the ``is_code_switched`` flag (>= 2 real languages).
 
-    Scale shape: one tokenize, one chunk explode, one shingle explode
-    + distinct (the exploded_shingles discipline — the chunk string is
-    materialized below the lambda, so trigram extraction is O(len) and
-    codegen-able), two partial-agg groupBys keyed by (id, chunk) /
-    (id, lang), and a broadcast-free rejoin on id. No corpus-wide
+    Scale shape: one tokenize, one chunk explode, ~60 per-row substring
+    probes per chunk (r6, guide §2.4: a 3-char profile gram is in the
+    chunk's distinct-trigram set iff the chunk contains it, so there is
+    no shingle explode, distinct shuffle or hits rejoin; chunks shorter
+    than 3 chars get 0 hits → 'und'), two partial-agg groupBys keyed by
+    (id, lang) / id, and a broadcast-free rejoin on id. No corpus-wide
     window, nothing quadratic in document length."""
-    ncores = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    norm = df.repartition(ncores).select(
+    norm = spread(df).select(
         F.col(id_col).alias("id"),
         tokens(F.lower(F.col(text_col))).alias("_toks"),
     )
@@ -1577,55 +1519,11 @@ def chunk_langid(df: DataFrame, text_col: str = "text",
             )
         ).alias("_ci", "_chunk"),
     )
-    if n == 3:
-        # r6 shape (guide §2.4): the per-chunk profile overlap is ~60
-        # substring probes per chunk — per-row codegen, no shingle
-        # explode, no distinct shuffle, no hits rejoin, and the chunk
-        # frame now has a single consumer so the localCheckpoint cut is
-        # gone too. Equivalence: a 3-char profile gram is in the chunk's
-        # distinct-trigram set iff the chunk contains it (chunks shorter
-        # than 3 chars contain none → 0 hits → 'und', same as the old
-        # left-join-null → coalesce-0 path).
-        lang = _argmax_lang({
-            lg: sum_profile_contains(F.col("_chunk"), profile)
-            for lg, profile in LANG_TRIGRAMS.items()
-        })
-        chunk_lang = chunks.select("id", "_ci", lang.alias("_lang"))
-    else:
-        # the chunk frame feeds BOTH the shingle build and the verdict
-        # rejoin; without a cut Catalyst re-inlines the tokenize + chunk
-        # explode into each consumer — two extra full corpus passes at
-        # 100 TB (the q82/q101 segment-frame precedent)
-        chunks = chunks.localCheckpoint(eager=True)
-        sh = (
-            chunks.filter(F.length("_chunk") >= n)
-            .select(
-                "id", "_ci", "_chunk",
-                F.explode(
-                    F.sequence(F.lit(1), F.length("_chunk") - (n - 1))
-                ).alias("_i"),
-            )
-            .select("id", "_ci",
-                    F.expr(f"substring(_chunk, _i, {n})").alias("_sh"))
-            .distinct()
-        )
-        hit_cols = {
-            lang: F.sum(
-                F.when(F.col("_sh").isin(profile), 1).otherwise(0)
-            )
-            for lang, profile in LANG_TRIGRAMS.items()
-        }
-        hits = sh.groupBy("id", "_ci").agg(
-            *[h.alias(f"_h_{lang}") for lang, h in hit_cols.items()]
-        )
-        lang = _argmax_lang(
-            {lang: F.coalesce(F.col(f"_h_{lang}"), F.lit(0))
-             for lang in LANG_TRIGRAMS}
-        )
-        chunk_lang = (
-            chunks.join(hits, ["id", "_ci"], "left")
-            .select("id", "_ci", lang.alias("_lang"))
-        )
+    lang = _argmax_lang({
+        lg: sum_profile_contains(F.col("_chunk"), profile)
+        for lg, profile in LANG_TRIGRAMS.items()
+    })
+    chunk_lang = chunks.select("id", "_ci", lang.alias("_lang"))
     per_lang = chunk_lang.groupBy("id", "_lang").agg(
         F.count("*").alias("_cnt")
     )
@@ -1679,7 +1577,7 @@ def split_leakage(df: DataFrame, text_col: str = "text",
     boilerplate grams are the hot keys; AQE skew-join handles them, and
     a production run typically drops grams above a df cap first, which
     only REMOVES report rows for ubiquitous grams)."""
-    grams = word_ngrams_exploded(df, text_col, id_col, n, spread=True)
+    grams = word_ngrams_exploded(spread(df), text_col, id_col, n)
     g = grams.withColumn(
         "split", deterministic_split(F.col("id"), train_pct, val_pct)
     )

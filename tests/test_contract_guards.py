@@ -33,27 +33,16 @@ def test_driver_contract_shapes():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 
 
-def test_session_master_parse_forms():
-    """Shuffle-partition inference handles every legal bracketed master:
-    plain N, '*' (real core count), N,maxFailures, local-cluster."""
-    import inspect
-    import os
+def test_session_default_shuffle_partitions(spark):
+    """Without ``shuffle_partitions``, get_spark sizes the shuffle to the
+    parallelism Spark reports for the master; ``extra_conf`` still wins."""
+    from epstein_browser_spark.session import get_spark
 
-    from epstein_browser_spark import session
-
-    src = inspect.getsource(session.get_spark)
-    # pure-logic check without building sessions: replicate the parse
-    def infer(master, cpus=32):
-        n = master[master.find("[") + 1: master.find("]")] if "[" in master else ""
-        n = n.split(",")[0].strip()
-        if n == "*":
-            return os.cpu_count() or cpus
-        return int(n) if n.isdigit() else cpus
-
-    assert infer("local[4]") == 4
-    assert infer("local[4,2]") == 4
-    assert infer("local-cluster[2,1,1024]") == 2
-    assert infer("local[*]") == (os.cpu_count() or 32)
-    assert infer("spark://host:7077") == 32
-    # and the real source carries the comma-split guard
-    assert 'split(",")' in src
+    key = "spark.sql.shuffle.partitions"
+    try:
+        spark.conf.set(key, "7")
+        assert get_spark(master="local[4]").conf.get(key) == "4"
+        assert get_spark(master="local[4]",
+                         extra_conf={key: "6"}).conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, "4")

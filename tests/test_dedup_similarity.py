@@ -654,7 +654,11 @@ def test_candidates_between_index_parity(spark):
         "text": [f"corpus document number {i % 7} about topic {i % 5} "
                  f"with shared vocabulary and some body text" for i in range(10)],
     }))
-    cf = dedup.minhash_features(corpus).localCheckpoint()
+    cf = dedup.minhash_features(corpus)
+    # the curation path's shingle explode runs behind exactly one spread
+    assert cf._jdf.queryExecution().executedPlan().toString().count(
+        "RoundRobinPartitioning") == 1
+    cf = cf.localCheckpoint()
     pf = dedup.minhash_features(probe).localCheckpoint()
     fly = dedup.minhash_candidates_between(
         pf.select("id", "sig"), corpus_sigs=cf.select("id", "sig")
