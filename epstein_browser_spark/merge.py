@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from epstein_browser_spark import fsutil
+from epstein_browser_spark.pipeline import bucket_of
 
 MERGE_ACTIONS = ["insert", "update", "skip", "delete"]
 
@@ -72,10 +73,6 @@ def merge_snapshot(
 # the REAL merge sink: apply a merge to a stored bucket-partitioned table
 # ---------------------------------------------------------------------------
 
-def _bucket_of(key_col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
-
-
 def _rewrite_buckets(
     spark: SparkSession,
     target_dir: str,
@@ -119,8 +116,9 @@ def merge_into_bucketed(
     """S6 as a real sink: apply the reference's incremental re-index diff
     (/root/reference/index_images.py:344-434 — skip unchanged / update
     changed / insert new / delete missing) to a parquet table laid out
-    ``bucket=pmod(xxhash64(key), n_buckets)``, rewriting ONLY the buckets
-    that contain a non-skip key. Unchanged buckets' files are not touched
+    ``bucket=pipeline.bucket_of(key, n_buckets)`` (the layout
+    ``run_extraction`` writes), rewriting ONLY the buckets that contain a
+    non-skip key. Unchanged buckets' files are not touched
     (asserted by tests on file lists + mtimes). On Iceberg this is
     ``MERGE INTO``; the classification and row-level result are identical.
 
@@ -128,7 +126,7 @@ def merge_into_bucketed(
     """
     target = spark.read.parquet(target_dir)
     actions = classify_merge(target, source, key_col, hash_col).withColumn(
-        "bucket", _bucket_of(key_col, n_buckets)
+        "bucket", bucket_of(key_col, n_buckets)
     ).localCheckpoint(eager=True)
     # ONE pass over the classification join: per-(action, bucket) counts
     # (≤ 4·n_buckets rows) give both the action totals and the changed
@@ -153,10 +151,10 @@ def merge_into_bucketed(
             key_col
         )
         src_b = source.withColumn(
-            "bucket", _bucket_of(key_col, n_buckets)
+            "bucket", bucket_of(key_col, n_buckets)
         ).filter(F.col("bucket").isin(changed_buckets))
         tgt_b = target.drop("bucket").withColumn(
-            "bucket", _bucket_of(key_col, n_buckets)
+            "bucket", bucket_of(key_col, n_buckets)
         ).filter(F.col("bucket").isin(changed_buckets))
         new_rows = src_b.join(upsert_keys, key_col, "left_semi").unionByName(
             tgt_b.join(skip_keys, key_col, "left_semi").select(src_b.columns)
@@ -186,18 +184,18 @@ def upsert_into_bucketed(
     table."""
     changed_buckets = sorted(
         int(r["bucket"])
-        for r in updates.select(_bucket_of(bucket_key, n_buckets).alias("bucket"))
+        for r in updates.select(bucket_of(bucket_key, n_buckets).alias("bucket"))
         .distinct()
         .collect()
     )
     if not changed_buckets:
         return {"upserted": 0, "buckets_rewritten": 0, "buckets": []}
     target = spark.read.parquet(target_dir).drop("bucket")
-    old_kept = target.withColumn("bucket", _bucket_of(bucket_key, n_buckets)).filter(
+    old_kept = target.withColumn("bucket", bucket_of(bucket_key, n_buckets)).filter(
         F.col("bucket").isin(changed_buckets)
     ).join(updates.select(*key_cols), key_cols, "left_anti")
     new_rows = old_kept.unionByName(
-        updates.withColumn("bucket", _bucket_of(bucket_key, n_buckets)),
+        updates.withColumn("bucket", bucket_of(bucket_key, n_buckets)),
         allowMissingColumns=False,
     )
     n_up = updates.count()

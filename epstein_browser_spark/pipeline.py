@@ -7,17 +7,30 @@ Design (SURVEY.md §7.1):
     → [skew salt: extraction is per-turn, so a hot conv_id may be split
        across tasks with pmod(xxhash64(conv_id, turn_idx), salt)]
     → repartition(n_partitions, conv_id[, salt])         # the ONE shuffle
-    → bucket = pmod(xxhash64(conv_id), n_buckets)        # stable layout key
     → sortWithinPartitions(conv_id, turn_idx)            # stable turn order
     → mapInPandas(extract)                               # vectorized core
+    → bucket = pmod(hash(conv_id), n_buckets)            # = the shuffle's hash
     → content_hash = md5(clean_text)                     # JVM-side
     → write parquet partitioned by bucket (dynamic overwrite = idempotent)
-    → per-bucket manifest JSON: lineage + metrics + status
+    → per-bucket manifest JSON: lineage + metrics + status + layout
+
+The bucket is the partitioner's own hash (:func:`bucket_of`): ``F.hash``
+is Murmur3 with seed 42, the expression ``HashPartitioning`` uses for the
+partition id. When ``n_partitions`` divides ``n_buckets``, bucket b lives
+only in shuffle partition ``b % n_partitions``; when ``n_buckets`` divides
+``n_partitions``, partition p holds only bucket ``p % n_buckets``. Either
+way each task writes one file per bucket it holds: max(n_partitions,
+n_buckets) files per sink instead of n_partitions × n_buckets. Salted runs
+(``salt > 1``, which shuffle on (conv_id, salt)) and non-dividing counts
+still give correct output, but give up this alignment and write the
+fragmented layout.
 
 Resumability (reference analog: JSON progress checkpoints,
 /root/reference/helpers/ocr_sync/ocr_sync.py:122-144): each completed bucket
-writes a manifest under ``<out>/_manifests/``; a rerun anti-joins the bucket
-list against completed manifests and recomputes only the remainder. Because
+writes a manifest under ``<out>/_manifests/`` recording the input snapshot
+and the bucket layout (``n_buckets`` + ``bucket_fn``); a rerun skips only
+buckets whose manifest matches all three and recomputes the remainder,
+deleting whatever an earlier run left in the buckets it now owns. Because
 the write is an atomic per-partition overwrite and extraction is
 deterministic, a crash mid-run never yields partial/duplicated rows after
 resume — this replaces the reference's mutable status flags
@@ -32,9 +45,10 @@ it is narrow.
 from __future__ import annotations
 
 import json
+import re
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from epstein_browser_spark.udfs import EXTRACT_SCHEMA, extract_map_in_pandas
@@ -53,12 +67,25 @@ TRANSCRIPTS_SCHEMA = (
 )
 
 
+# recorded in every manifest: a manifest written under another bucket
+# function describes a different layout and never counts as completed
+BUCKET_FN = "murmur3_42"
+
+
+def bucket_of(col: str | Column, n_buckets: int) -> Column:
+    """THE bucket expression of every bucketed sink (extraction data,
+    failures queue, merge/upsert rewrites): ``pmod(hash(col), n_buckets)``.
+    ``F.hash`` is Murmur3 with seed 42, the same expression
+    ``repartition(n, col)`` uses for its partition id, so the bucket and
+    the shuffle agree (see the module docstring for the divisibility rule).
+    """
+    return F.pmod(F.hash(col), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Stable partition key: hash-bucket of conv_id (never RoundRobin —
     bucket membership must be deterministic for resume)."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_of("conv_id", n_buckets))
 
 
 def extract_transcripts(
@@ -78,13 +105,19 @@ def extract_transcripts(
     collisions leaves ~40% of partitions empty and stacks multiple buckets
     on others (measured: 78/128 busy, 2.6× skew). ``n_partitions`` defaults
     to n_buckets but should be ~2-4× total cores so stragglers smooth out.
-    The write-side layout (partitionBy bucket) is independent of this
-    physical partitioning.
+
+    The bucket is :func:`bucket_of`, the partitioner's own Murmur3 hash.
+    When ``n_partitions`` divides ``n_buckets``, bucket b sits only in
+    partition ``b % n_partitions`` (pinned by tests); when ``n_buckets``
+    divides ``n_partitions``, each partition holds a single bucket. The
+    bucketed write then produces one file per (task, bucket it holds) — no
+    extra Exchange or sort buys that layout.
 
     ``salt`` > 1 additionally spreads each conversation across ``salt``
     tasks for skewed conversations — extraction is per-turn, so
     correctness is unaffected (asserted by tests: salted == unsalted
-    output).
+    output), but the partition no longer follows the bucket, so every task
+    may write into every bucket (n_partitions × n_buckets files).
 
     ``assume_partitioned=True`` skips the repartition entirely: when the
     input table is already laid out by conv_id bucket (an Iceberg table
@@ -248,32 +281,43 @@ def run_reprocessing(
         post = spark.read.parquet(data_dir).filter(
             F.col("bucket").isin(affected)
         )
-        _write_failures(spark, post, out_dir, scope_buckets=set(affected))
+        _write_failures(spark, post, out_dir, owns=set(affected).__contains__)
     else:
         res["buckets_rewritten"] = 0
     res["still_failing"] = read_failures(spark, out_dir).count()
     return res
 
 
+def _drop_buckets(spark: SparkSession, parent: str, drop) -> None:
+    """Delete the children of ``parent`` named ``bucket=N`` (sink
+    partitions) or ``bucket-N.json`` (manifests) for which ``drop(N)``
+    holds — dynamic overwrite only replaces partitions present in the
+    written frame, so a bucket a write no longer produces keeps its stale
+    files unless removed here. One bounded listing (≤ n_buckets names)."""
+    from epstein_browser_spark import fsutil
+
+    for name in fsutil.list_names(spark, parent):
+        m = re.fullmatch(r"bucket[=-](\d+)(?:\.json)?", name)
+        if m and drop(int(m.group(1))):
+            fsutil.delete(spark, f"{parent}/{name}")
+
+
 def _write_failures(spark: SparkSession, extracted: DataFrame, out_dir: str,
-                    scope_buckets: set[int] | None = None) -> None:
-    """Failures sink: per-bucket dynamic overwrite + explicit cleanup of
-    in-scope bucket dirs that became failure-free (dynamic overwrite only
-    replaces partitions present in the written frame). ``scope_buckets``
-    bounds the cleanup on a resumed run — completed buckets' queue entries
-    must survive a resume that never recomputed them."""
+                    owns, written: set[int] | None = None) -> None:
+    """Failures sink: per-bucket dynamic overwrite + cleanup of the bucket
+    dirs this write owns (``owns(b)``) that became failure-free. ``owns``
+    bounds the cleanup — completed buckets' queue entries must survive a
+    resume that never recomputed them. ``written`` (the buckets holding a
+    low-quality row) is computed with one more job when not passed."""
     from epstein_browser_spark import fsutil
 
     fdir = f"{out_dir}/{FAILURES_DIR}"
     fails = failures_table(extracted)
     fsutil.write_partition_overwrite(fails, fdir)
-    written = {int(r["bucket"]) for r in fails.select("bucket").distinct().collect()}
-    for name in fsutil.list_names(spark, fdir):
-        if name.startswith("bucket="):
-            b = int(name.split("=", 1)[1])
-            in_scope = scope_buckets is None or b in scope_buckets
-            if in_scope and b not in written:
-                fsutil.delete(spark, f"{fdir}/{name}")
+    if written is None:
+        written = {int(r["bucket"])
+                   for r in fails.select("bucket").distinct().collect()}
+    _drop_buckets(spark, fdir, lambda b: owns(b) and b not in written)
 
 
 def _manifest_path(out_dir: str, bucket: int) -> str:
@@ -286,11 +330,17 @@ def completed_buckets(
     out_dir: str,
     input_snapshot: str | None = None,
     spark: SparkSession | None = None,
+    n_buckets: int | None = None,
 ) -> set[int]:
-    """Buckets with a completed manifest. When ``input_snapshot`` is given,
-    only manifests recorded against that snapshot count — a changed input
-    invalidates prior completions, mirroring the reference's file-hash
+    """Buckets with a completed manifest written under this module's
+    bucket function (``bucket_fn`` == :data:`BUCKET_FN`; a manifest without
+    it predates the field and does not count). When ``input_snapshot`` is
+    given, only manifests recorded against that snapshot count — a changed
+    input invalidates prior completions, mirroring the reference's file-hash
     change detection (/root/reference/index_images.py:344-352).
+    When ``n_buckets`` is given, only manifests of that bucket count count:
+    bucket N of another layout holds different conversations, so skipping
+    it would drop or duplicate rows.
 
     Reads through the Hadoop FS API (same storage the data writes target —
     hdfs:///s3a:// out_dirs resume correctly, ADVICE r1); falls back to the
@@ -306,9 +356,12 @@ def completed_buckets(
         if name.startswith("bucket-") and name.endswith(".json"):
             try:
                 m = json.loads(fsutil.read_text(spark, f"{mdir}/{name}") or "")
-                if m.get("status") == "completed" and (
-                    input_snapshot is None
-                    or m.get("input_snapshot") == input_snapshot
+                if (
+                    m.get("status") == "completed"
+                    and m.get("bucket_fn") == BUCKET_FN
+                    and (n_buckets is None or m.get("n_buckets") == n_buckets)
+                    and (input_snapshot is None
+                         or m.get("input_snapshot") == input_snapshot)
                 ):
                     done.add(int(m["bucket"]))
             except (ValueError, KeyError, json.JSONDecodeError):
@@ -329,17 +382,33 @@ def run_extraction(
     """Run (or resume) the extraction job; returns run metrics.
 
     Output layout:
-      <out_dir>/data/bucket=N/*.parquet   (dynamic-overwrite per bucket)
-      <out_dir>/_manifests/bucket-N.json  (lineage + metrics + status)
+      <out_dir>/data/bucket=N/*.parquet      (dynamic-overwrite per bucket)
+      <out_dir>/failures/bucket=N/*.parquet  (E7 queue, same layout)
+      <out_dir>/_manifests/bucket-N.json     (lineage + metrics + status)
+
+    The run owns every bucket without a matching completed manifest
+    (:func:`completed_buckets`): it rewrites them and deletes what an
+    earlier run (another snapshot, bucket count or crash) left in the owned
+    buckets it did not write, so the output always holds the input once.
     """
     from epstein_browser_spark import fsutil
 
     t0 = time.time()
-    done = completed_buckets(out_dir, input_snapshot, spark) if resume else set()
-    src = with_bucket(transcripts, n_buckets)
+    done = (completed_buckets(out_dir, input_snapshot, spark, n_buckets)
+            if resume else set())
+
+    def owns(b: int) -> bool:
+        return b not in done
+
+    # stale manifests go first: a crash past this point leaves owned
+    # buckets without a manifest, so any later run recomputes them
+    mdir = f"{out_dir}/{MANIFEST_DIR}"
+    _drop_buckets(spark, mdir, owns)
+    src = transcripts
     if done:
-        src = src.filter(~F.col("bucket").isin(sorted(done)))
-    src = src.drop("bucket")
+        src = with_bucket(src, n_buckets).filter(
+            ~F.col("bucket").isin(sorted(done))
+        ).drop("bucket")
 
     # localCheckpoint the extracted frame ONCE: the data write, the failures
     # queue, and the per-bucket metrics below all consume it — without the
@@ -351,23 +420,18 @@ def run_extraction(
     extracted = extract_transcripts(
         src, n_buckets=n_buckets, salt=salt, n_partitions=n_partitions
     ).localCheckpoint(eager=True)
-    data_dir = f"{out_dir}/data"
-    fsutil.write_partition_overwrite(extracted, data_dir)
 
     # per-bucket metrics + lineage manifest (A9/S9/S10) from the PRE-WRITE
     # frame. One row per bucket — tiny aggregate, safe to collect. The frame
     # already contains only this run's buckets, so a resumed run never
-    # recomputes finished output.
-    post = extracted
-    # E7 failures/priority queue for the next re-drive, same bucket layout
-    # as the data sink; cleanup scoped to this run's recomputed buckets
-    _write_failures(spark, post, out_dir,
-                    scope_buckets=set(range(n_buckets)) - done)
+    # recomputes finished output. The same rows say which buckets each
+    # sink wrote, so the cleanup below needs no job of its own.
     stats = (
-        post.groupBy("bucket")
+        extracted.groupBy("bucket")
         .agg(
             F.count("*").alias("rows_out"),
             F.sum(F.when(F.col("parse_failed"), 1).otherwise(0)).alias("parse_failures"),
+            F.sum(F.when(F.col("is_low_quality"), 1).otherwise(0)).alias("low_quality"),
             F.sum("chars_in").alias("chars_in"),
             F.sum("chars_out").alias("chars_out"),
             F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
@@ -377,20 +441,29 @@ def run_extraction(
         )
         .collect()
     )
-    fsutil.mkdirs(spark, f"{out_dir}/{MANIFEST_DIR}")
-    wrote = 0
+    written = {int(r["bucket"]) for r in stats}
+    data_dir = f"{out_dir}/data"
+    fsutil.write_partition_overwrite(extracted, data_dir)
+    _drop_buckets(spark, data_dir, lambda b: owns(b) and b not in written)
+    # E7 failures/priority queue for the next re-drive, same bucket layout
+    # as the data sink; cleanup scoped to this run's owned buckets
+    _write_failures(spark, extracted, out_dir, owns,
+                    written={int(r["bucket"]) for r in stats if r["low_quality"]})
+
+    fsutil.mkdirs(spark, mdir)
     for r in stats:
         b = int(r["bucket"])
-        if b in done:
-            continue
         manifest = {
             "partition_key": f"bucket={b}",
             "bucket": b,
+            "n_buckets": n_buckets,
+            "bucket_fn": BUCKET_FN,
             "status": "completed",
             "input_snapshot": input_snapshot,
             "rows_in": int(r["rows_out"]),  # extraction is 1:1 per turn
             "rows_out": int(r["rows_out"]),
             "parse_failures": int(r["parse_failures"]),
+            "low_quality": int(r["low_quality"]),
             "chars_in": int(r["chars_in"]),
             "chars_out": int(r["chars_out"]),
             "boilerplate_ratio": float(r["boilerplate_ratio"] or 0.0),
@@ -405,13 +478,12 @@ def run_extraction(
         }
         fsutil.write_text(spark, _manifest_path(out_dir, b),
                           json.dumps(manifest))
-        wrote += 1
 
     elapsed = time.time() - t0
-    rows = sum(int(r["rows_out"]) for r in stats if int(r["bucket"]) not in done)
+    rows = sum(int(r["rows_out"]) for r in stats)
     return {
         "elapsed_sec": elapsed,
-        "buckets_completed": wrote,
+        "buckets_completed": len(stats),
         "buckets_skipped": len(done),
         "rows_out": rows,
         "turns_per_sec": rows / elapsed if elapsed > 0 else 0.0,

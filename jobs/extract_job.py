@@ -10,6 +10,14 @@ Cluster usage (the package zip comes from tools/make_pyfiles_zip.py):
       --buckets 16384 --partitions 32768 --salt 4 \\
       --snapshot <input snapshot id>
 
+The bucket is the shuffle's own hash (pipeline.bucket_of), so with
+--partitions a multiple or divisor of --buckets each task writes whole
+buckets: max(buckets, partitions) files per sink (32768 here without
+--salt). --salt 4 splits hot conversations across 4 tasks, which trades
+that layout for skew: the salted shuffle no longer follows the bucket and
+every task may write into every bucket (up to 32768 × 16384 files per
+sink). Leave it at 1 unless single conversations straggle.
+
 Local smoke:
 
   spark-submit --master 'local[8]' --py-files dist/epstein_browser_spark.zip \\

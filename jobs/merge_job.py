@@ -25,7 +25,8 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--target", required=True,
-                    help="existing table dir, layout bucket=pmod(xxhash64(key), N)")
+                    help="existing table dir, layout "
+                         "bucket=pipeline.bucket_of(key, N)")
     ap.add_argument("--source", required=True,
                     help="parquet path of the new full snapshot")
     ap.add_argument("--key", default="doc_id")

@@ -6,6 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from epstein_browser_spark import dedup, merge, multimodal, similarity, textstats
+from epstein_browser_spark.pipeline import bucket_of
 
 
 def _docs(spark):
@@ -273,7 +274,7 @@ def test_merge_into_bucketed_end_to_end(spark, tmp_path):
         F.concat(F.lit("payload "), F.col("id").cast("string")).alias("body"),
     )
     v1.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        "bucket", bucket_of("doc_id", n_buckets)
     ).write.partitionBy("bucket").parquet(target_dir)
 
     # v2: update doc_id%37==0, delete doc_id%41==0, insert 5 new keys
@@ -351,7 +352,7 @@ def test_merge_into_bucketed_all_skip_is_noop(spark, tmp_path):
         F.col("id").alias("doc_id"), F.md5(F.col("id").cast("string")).alias("h")
     )
     v1.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")
+        "bucket", bucket_of("doc_id", 8)
     ).write.partitionBy("bucket").parquet(target_dir)
     before = _snapshot_files(target_dir)
     stats = merge.merge_into_bucketed(spark, target_dir, v1, "doc_id", "h", 8)
@@ -694,7 +695,7 @@ def test_merge_skip_keeps_target_row(spark, tmp_path):
         "doc_id long, h string, body string",
     )
     v1.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        "bucket", bucket_of("doc_id", n_buckets)
     ).write.partitionBy("bucket").parquet(tgt)
 
     # source: doc 1 same hash but DIFFERENT body; doc 2 updated hash;

@@ -99,20 +99,114 @@ def test_snapshot_change_invalidates_resume(spark, corpus_sdf, tmp_path):
 
 
 def test_manifest_contents(spark, corpus_sdf, tmp_path):
+    from epstein_browser_spark.pipeline import BUCKET_FN, read_failures
+
     out = str(tmp_path / "run3")
     run_extraction(spark, corpus_sdf, out, n_buckets=4, input_snapshot="snapshot-42")
     files = sorted(glob.glob(os.path.join(out, "_manifests", "*.json")))
     assert len(files) == 4
-    total_rows = 0
+    total_rows = total_low_quality = 0
     for f in files:
         m = json.load(open(f))
         assert m["status"] == "completed"
         assert m["input_snapshot"] == "snapshot-42"
+        assert (m["n_buckets"], m["bucket_fn"]) == (4, BUCKET_FN)
         assert m["chars_in"] >= m["chars_out"] >= 0
         assert 0.0 <= m["boilerplate_ratio"] <= 1.0
         assert m["lineage"][0]["source"] == "transcripts"
         total_rows += m["rows_out"]
+        total_low_quality += m["low_quality"]
     assert total_rows == spark.read.parquet(out + "/data").count()
+    # the per-bucket low_quality counts drive the failures-dir cleanup
+    assert total_low_quality == read_failures(spark, out).count() > 0
+
+
+@pytest.mark.parametrize("n_buckets,n_partitions", [(8, 4), (2, 4)])
+def test_bucket_follows_shuffle_partition(spark, corpus_sdf, n_buckets,
+                                          n_partitions):
+    """The bucket is the partitioner's own hash: when one count divides
+    the other, bucket and shuffle partition agree modulo the smaller, so
+    with 8 buckets on 4 partitions bucket b lives only in partition b % 4,
+    and with 2 buckets each partition holds one bucket. A Spark upgrade
+    that changes HashPartitioning's hash fails here instead of silently
+    fragmenting every bucketed write."""
+    from pyspark.sql import functions as F
+
+    out = extract_transcripts(corpus_sdf, n_buckets=n_buckets,
+                              n_partitions=n_partitions)
+    pairs = {
+        (r["bucket"], r["pid"])
+        for r in out.select("bucket", F.spark_partition_id().alias("pid"))
+        .distinct().collect()
+    }
+    assert {b for b, _ in pairs} == set(range(n_buckets))
+    assert len({p for _, p in pairs}) == n_partitions
+    k = min(n_buckets, n_partitions)
+    assert all(b % k == p % k for b, p in pairs), sorted(pairs)
+
+
+def test_run_writes_one_file_per_bucket(spark, corpus_sdf, tmp_path):
+    """With the bucket aligned to the shuffle, every task writes whole
+    buckets: one parquet file per data and failures bucket dir, not one
+    per (task, bucket)."""
+    out = str(tmp_path / "aligned")
+    run_extraction(spark, corpus_sdf, out, n_buckets=8, n_partitions=4)
+    for sink in ("data", "failures"):
+        dirs = glob.glob(os.path.join(out, sink, "bucket=*"))
+        assert dirs, sink
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+
+def test_resume_with_other_bucket_count_recomputes(spark, corpus_sdf, tmp_path):
+    """A manifest counts as completed only under the same bucket count and
+    bucket function: resuming a complete 4-bucket output at 8 buckets must
+    recompute everything (not skip buckets 0-3 and duplicate their rows),
+    and going back to 4 must drop the 8-bucket run's buckets 4-7."""
+    from pyspark.sql import functions as F
+
+    from epstein_browser_spark.pipeline import read_failures
+
+    out = str(tmp_path / "relayout")
+    n_in = corpus_sdf.count()
+    key = ["conv_id", "turn_idx"]
+    m = run_extraction(spark, corpus_sdf, out, n_buckets=4)
+    n_fail = read_failures(spark, out).count()
+    for n_buckets in (8, 4):
+        m = run_extraction(spark, corpus_sdf, out, n_buckets=n_buckets)
+        assert m["buckets_skipped"] == 0
+        assert m["buckets_completed"] == n_buckets
+        for sink, n_rows in (("data", n_in), ("failures", n_fail)):
+            spark.catalog.refreshByPath(f"{out}/{sink}")
+            got = spark.read.parquet(f"{out}/{sink}")
+            assert got.count() == n_rows, (n_buckets, sink)
+            assert got.groupBy(*key).count().filter(F.col("count") > 1) \
+                .count() == 0, (n_buckets, sink)
+            assert {r["bucket"] for r in got.select("bucket").distinct()
+                    .collect()} <= set(range(n_buckets)), (n_buckets, sink)
+        assert completed_buckets(out, n_buckets=n_buckets) == \
+            set(range(n_buckets))
+        assert len(glob.glob(os.path.join(out, "_manifests", "*.json"))) \
+            == n_buckets
+
+
+def test_manifest_without_layout_fields_is_not_completed(spark, corpus_sdf,
+                                                         tmp_path):
+    """A manifest written before the layout fields existed (or under
+    another bucket function) does not count: its bucket is recomputed."""
+    from epstein_browser_spark import fsutil
+
+    out = str(tmp_path / "legacy")
+    run_extraction(spark, corpus_sdf, out, n_buckets=4)
+    path = os.path.join(out, "_manifests", "bucket-00002.json")
+    m = json.load(open(path))
+    del m["n_buckets"], m["bucket_fn"]
+    fsutil.write_text(spark, path, json.dumps(m))  # keeps the .crc in step
+    assert completed_buckets(out, n_buckets=4) == {0, 1, 3}
+    assert completed_buckets(out) == {0, 1, 3}
+    res = run_extraction(spark, corpus_sdf, out, n_buckets=4)
+    assert (res["buckets_completed"], res["buckets_skipped"]) == (1, 3)
+    assert spark.read.parquet(out + "/data").count() == corpus_sdf.count()
 
 
 def test_prebucketed_input_is_shuffle_free(spark, corpus_sdf, tmp_path):

@@ -5,7 +5,7 @@ import os
 
 import pandas as pd
 
-from epstein_browser_spark.pipeline import extract_transcripts
+from epstein_browser_spark.pipeline import bucket_of, extract_transcripts
 from epstein_browser_spark.streaming import start_extraction_stream
 
 
@@ -366,13 +366,10 @@ def test_stream_upsert_sink_replaces_by_key(spark, tmp_path):
     assert rows[("conv_a", 1)].startswith("the corrected second turn")
     assert ("conv_c", 0) in rows
     # only the buckets hit by batch-2 keys were rewritten
-    from pyspark.sql import functions as F
     touched = {
         r[0] for r in spark.createDataFrame(
             mk([("conv_a", 1, "x"), ("conv_c", 0, "x")])
-        ).select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")
-        ).distinct().collect()
+        ).select(bucket_of("conv_id", 4)).distinct().collect()
     }
     untouched_files = [
         f for f in mt_before
