@@ -611,6 +611,66 @@ def _snap_str(df: DataFrame) -> DataFrame:
     return df.withColumn("snap", F.col("snap").cast("string"))
 
 
+def _union_snaps(base: DataFrame | None, parts: DataFrame | None,
+                 snap_filter=None) -> DataFrame | None:
+    """Turn-mode visibility: ``base`` plus the rows of the snap-partitioned
+    ``parts`` that pass ``snap_filter`` (a Column over ``snap``; None keeps
+    every snapshot), snap column dropped. None when neither side exists.
+
+    allowMissingColumns: audit columns can differ per run (a base built
+    with redact_pii and an increment without, or vice versa) — absent
+    columns read as null instead of making the corpus unreadable."""
+    if parts is not None:
+        if snap_filter is not None:
+            parts = _snap_str(parts).filter(snap_filter)
+        parts = parts.drop("snap")
+    if base is None:
+        return parts
+    if parts is None:
+        return base
+    return base.unionByName(parts, allowMissingColumns=True)
+
+
+def _supersede(parts: DataFrame | None, key: str, seqs: dict[str, int],
+               base: DataFrame | None = None) -> DataFrame | None:
+    """THE supersession rule of conversation-mode ingest, shared by the
+    read-time shadow and the promote folds: a snapshot that delivers a
+    ``key`` REPLACES every earlier row of it.
+
+    Among the rows of the snap-partitioned ``parts`` whose snapshot has a
+    sequence in ``seqs`` (rows of any other snapshot — a crashed
+    increment's half-commit, the caller's own excluded snapshot — are
+    invisible), each key's highest-seq snapshot wins with ALL its rows for
+    that key (a conversation's turns, an id's band rows); ``base`` rows of
+    a key that any such snapshot delivered are hidden. Returns the winners
+    plus the surviving base rows, snap column dropped; None when neither
+    side has rows.
+
+    Scale shape: ``seqs`` is a literal map (one entry per un-promoted
+    snapshot) and the snapshot filter is a static partition prune; the
+    winner is a window max over the increment side only, and the shadow is
+    an anti-join of the base scan against the DISTINCT winning key set —
+    bounded by un-promoted increment volume, hence broadcast. No
+    corpus-wide shuffle."""
+    if parts is None or not seqs:
+        return base
+    from pyspark.sql import Window
+
+    seq_of = F.create_map(*[F.lit(v) for kv in sorted(seqs.items())
+                            for v in kv])
+    parts = (
+        _snap_str(parts).filter(F.col("snap").isin(sorted(seqs)))
+        .withColumn("_seq", seq_of[F.col("snap")])
+        .withColumn("_wseq", F.max("_seq").over(Window.partitionBy(key)))
+    )
+    latest = parts.filter(F.col("_seq") == F.col("_wseq")).drop(
+        "_seq", "_wseq")
+    if base is not None:
+        base = base.join(F.broadcast(latest.select(key).distinct()), key,
+                         "left_anti")
+    return _union_snaps(base, latest)
+
+
 def _read_curated_base(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The current curated BASE table (pointer-resolved version dir, or
     the legacy unversioned tree), or None when nothing is installed."""
@@ -646,6 +706,14 @@ def _incr_marker_map(spark: SparkSession, out_dir: str) -> dict[str, dict]:
     return out
 
 
+def _marker_seqs(markers: dict[str, dict],
+                 exclude_snap: str | None = None) -> dict[str, int]:
+    """snapshot -> committed ``seq`` of each completed increment marker
+    (the supersession order of :func:`_supersede`)."""
+    return {s: int(m.get("seq", 0)) for s, m in markers.items()
+            if s != exclude_snap}
+
+
 def _conv_visible_curated(spark: SparkSession, out_dir: str,
                           exclude_snap: str | None = None,
                           markers: dict[str, dict] | None = None,
@@ -654,84 +722,31 @@ def _conv_visible_curated(spark: SparkSession, out_dir: str,
 
     Conversation increments REPLACE redelivered conversations (a dialog
     that grew re-concatenates, re-signs, and supersedes its previous
-    rows), so visibility is resolved per conversation: among the base
-    (sequence 0) and each completed increment snapshot (its marker's
-    ``seq``), the highest sequence that delivered a conv_id wins, and
-    every lower-sequence copy of that conversation is hidden. Snapshots
-    WITHOUT a completed marker (a crashed increment's half-commit) are
-    invisible — conversation-mode reads are read-committed.
-
-    Scale shape: the shadow is an anti-join of the base scan against the
-    DISTINCT increment conv_id set — bounded by un-promoted increment
-    volume (small by the promote contract), hence broadcast — plus a
-    winner filter on the increment rows themselves. No corpus-wide
-    shuffle."""
+    rows), so visibility is resolved per conversation by
+    :func:`_supersede` over the completed markers' seqs (the base is
+    sequence 0). Snapshots WITHOUT a completed marker (a crashed
+    increment's half-commit) are invisible — conversation-mode reads are
+    read-committed."""
     if markers is None:
         markers = _incr_marker_map(spark, out_dir)
-    base = _read_curated_base(spark, out_dir)
-    incr = _read_optional(spark, f"{out_dir}/{CURATED_INCR}")
-    if incr is not None:
-        incr = _snap_str(incr)
-        if exclude_snap is not None:
-            incr = incr.filter(F.col("snap") != exclude_snap)
-        seq_rows = [(s, int(m.get("seq", 0))) for s, m in markers.items()
-                    if s != exclude_snap]
-        if seq_rows:
-            seq_df = spark.createDataFrame(seq_rows, "snap string, _seq int")
-            # inner join: rows of UNMARKED snaps (half-commits) drop out
-            incr = incr.join(F.broadcast(seq_df), "snap")
-        else:
-            incr = None
-    if incr is None:
-        return base
-    win = incr.groupBy("conv_id").agg(F.max("_seq").alias("_wseq"))
-    incr_vis = (
-        incr.join(F.broadcast(win), "conv_id")
-        .filter(F.col("_seq") == F.col("_wseq"))
-        .drop("_seq", "_wseq", "snap")
-    )
-    if base is None:
-        return incr_vis
-    base_vis = base.join(
-        F.broadcast(incr.select("conv_id").distinct()), "conv_id", "left_anti"
-    )
-    return base_vis.unionByName(incr_vis, allowMissingColumns=True)
+    return _supersede(_read_optional(spark, f"{out_dir}/{CURATED_INCR}"),
+                      "conv_id", _marker_seqs(markers, exclude_snap),
+                      base=_read_curated_base(spark, out_dir))
 
 
 def _existing_features_latest(spark: SparkSession, out_dir: str,
                               exclude_snap: str,
                               markers: dict[str, dict]) -> DataFrame | None:
-    """The corpus near-dup feature index with REPLACEMENTS resolved: an
-    increment that re-signed a conversation supersedes the base (and any
-    lower-seq) feature row for that id. Base rows whose id appears in a
-    completed increment snapshot are stale ghosts — verifying a candidate
-    against a superseded gram set would measure similarity to text the
-    corpus no longer contains. Same bounded-shadow shape as
-    :func:`_conv_visible_curated` (anti-join base against the increment
-    id set; winner-per-id among the small increment side)."""
-    from pyspark.sql import Window
-
-    feats = _read_optional(spark, f"{out_dir}/_scratch/minhash")
-    incr = _read_optional(spark, f"{out_dir}/{SCRATCH_INCR}")
-    if incr is not None:
-        incr = _snap_str(incr).filter(F.col("snap") != exclude_snap)
-        seq_rows = [(s, int(m.get("seq", 0))) for s, m in markers.items()
-                    if s != exclude_snap]
-        if seq_rows:
-            seq_df = spark.createDataFrame(seq_rows, "snap string, _seq int")
-            incr = incr.join(F.broadcast(seq_df), "snap")
-            w = Window.partitionBy("id").orderBy(F.desc("_seq"))
-            incr = (incr.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1).drop("_rn", "_seq", "snap"))
-        else:
-            incr = None
-    if feats is None:
-        return incr
-    if incr is None:
-        return feats
-    base_vis = feats.join(F.broadcast(incr.select("id").distinct()),
-                          "id", "left_anti")
-    return base_vis.unionByName(incr.select(feats.columns))
+    """The corpus near-dup feature index with REPLACEMENTS resolved
+    (:func:`_supersede` by feature id): an increment that re-signed a
+    conversation supersedes the base (and any lower-seq) feature row for
+    that id. Base rows whose id appears in a completed increment snapshot
+    are stale ghosts — verifying a candidate against a superseded gram set
+    would measure similarity to text the corpus no longer contains."""
+    return _supersede(_read_optional(spark, f"{out_dir}/{SCRATCH_INCR}"),
+                      "id", _marker_seqs(markers, exclude_snap),
+                      base=_read_optional(spark,
+                                          f"{out_dir}/_scratch/minhash"))
 
 
 def read_curated(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -750,49 +765,29 @@ def read_curated(spark: SparkSession, out_dir: str) -> DataFrame:
     snapshots are invisible."""
     if _base_unit(spark, out_dir) == "conversation":
         vis = _conv_visible_curated(spark, out_dir)
-        if vis is None:
-            raise FileNotFoundError(
-                f"no curated output under {out_dir} (conversation-mode: "
-                "neither a curated base version nor a completed increment "
-                "is readable — run run_curation first)"
-            )
-        return vis
-    base = _read_curated_base(spark, out_dir)
-    incr = _read_optional(spark, f"{out_dir}/{CURATED_INCR}")
-    if base is None and incr is None:
+    else:
+        vis = _existing_curated(spark, out_dir)
+    if vis is None:
         raise FileNotFoundError(
             f"no curated output under {out_dir} (neither a curated base "
-            f"version nor {CURATED_INCR}/ is readable — run run_curation "
-            "first; a base run that kept zero docs plus zero increments "
-            "has no rows to read)"
+            f"version nor a completed increment under {CURATED_INCR}/ is "
+            "readable — run run_curation first; a base run that kept zero "
+            "docs plus zero increments has no rows to read)"
         )
-    if incr is None:
-        return base
-    incr = incr.drop("snap")
-    if base is None:  # empty base run, data arrived via increments
-        return incr
-    # allowMissingColumns: audit columns can differ per run (e.g. a base
-    # built with redact_pii and an increment without, or vice versa) —
-    # absent columns read as null instead of making the corpus unreadable
-    return base.unionByName(incr, allowMissingColumns=True)
+    return vis
 
 
 def _existing_curated(spark: SparkSession, out_dir: str,
-                      exclude_snap: str) -> DataFrame | None:
-    """read_curated minus the named snapshot's partitions — what an
-    increment run anti-joins against (its own possibly-half-committed
-    prior attempt must not count as 'existing'). None when nothing has
-    been curated yet (empty base run, no prior increments)."""
-    base = _read_curated_base(spark, out_dir)
-    incr = _read_optional(spark, f"{out_dir}/{CURATED_INCR}")
-    if incr is not None:
-        incr = _snap_str(incr).filter(
-            F.col("snap") != exclude_snap).drop("snap")
-    if base is None:
-        return incr
-    if incr is None:
-        return base
-    return base.unionByName(incr, allowMissingColumns=True)
+                      exclude_snap: str | None = None) -> DataFrame | None:
+    """Turn-mode curated rows: the base plus every increment snapshot
+    except ``exclude_snap`` — what an increment run anti-joins against
+    (its own possibly-half-committed prior attempt must not count as
+    'existing'). None when nothing has been curated yet (empty base run,
+    no prior increments)."""
+    return _union_snaps(
+        _read_curated_base(spark, out_dir),
+        _read_optional(spark, f"{out_dir}/{CURATED_INCR}"),
+        None if exclude_snap is None else F.col("snap") != exclude_snap)
 
 
 def _existing_features(spark: SparkSession, out_dir: str,
@@ -801,16 +796,10 @@ def _existing_features(spark: SparkSession, out_dir: str,
     increments' (id, sig, grams) rows — the current snapshot's partition
     is excluded so a retried run never probes against itself. None when
     no features exist yet (empty base run, no prior increments)."""
-    feats = _read_optional(spark, f"{out_dir}/_scratch/minhash")
-    incr = _read_optional(spark, f"{out_dir}/{SCRATCH_INCR}")
-    if incr is not None:
-        incr = _snap_str(incr).filter(
-            F.col("snap") != exclude_snap).drop("snap")
-    if feats is None:
-        return incr
-    if incr is None:
-        return feats
-    return feats.unionByName(incr.select(feats.columns))
+    return _union_snaps(
+        _read_optional(spark, f"{out_dir}/_scratch/minhash"),
+        _read_optional(spark, f"{out_dir}/{SCRATCH_INCR}"),
+        F.col("snap") != exclude_snap)
 
 
 def _delete_snapshot_trees(spark: SparkSession, out_dir: str,
@@ -887,11 +876,16 @@ def run_curation_increment(
     ``unit`` defaults to the BASE run's granularity (its curate-stage
     marker); passing an explicit unit that differs from the base raises
     — probing a conversation-signature index with turn signatures (or
-    vice versa) would dedup at the wrong granularity. unit='turn' is the
-    append-only path below; unit='conversation' dispatches to
-    :func:`_run_conv_increment`, which additionally RE-FORMS redelivered
+    vice versa) would dedup at the wrong granularity. unit='turn' runs
+    the append-only body :func:`_turn_increment`; unit='conversation'
+    runs :func:`_conv_increment`, which additionally RE-FORMS redelivered
     conversations (old + new turns), re-signs them, and supersedes their
-    earlier rows (VERDICT r4 item 3).
+    earlier rows (VERDICT r4 item 3). Both units share this skeleton:
+    resume check → marker seq → extraction → the unit's body (built from
+    the shared corpus probe :func:`_corpus_dups` and within-batch keep
+    policy :func:`_keep_canonical`) → either the zero-doc commit or the
+    tail (annotate → ``curated_incr`` → split manifests → stale-split
+    cleanup) → stage marker.
 
     How the against-corpus dedup stays O(increment): the base run left
     its (id, sig, grams) minhash scratch table on disk; the increment's
@@ -935,20 +929,18 @@ def run_curation_increment(
         raise ValueError(
             f"snapshot={snapshot!r} is reserved; pick a batch-unique id"
         )
-    if base_unit == "conversation":
-        return _run_conv_increment(
-            spark, transcripts, out_dir, snapshot, n_buckets=n_buckets,
-            salt=salt, n_partitions=n_partitions,
-            near_threshold=near_threshold, redact_pii=redact_pii,
-            resume=resume, bpe_merges=bpe_merges, t0=t0,
-        )
     stage = f"incr-{snapshot}"
     token_counter = "bpe" if bpe_merges is not None else "whitespace"
-    incr_settings = {"token_counter": token_counter,
-                     "redact_pii": redact_pii,
-                     "near_threshold": near_threshold}
+    settings = {"token_counter": token_counter,
+                "redact_pii": redact_pii,
+                "near_threshold": near_threshold}
+    if base_unit == "conversation":
+        # only conversation markers record the unit: adding the key to
+        # turn markers would make every stored turn increment's resume
+        # check fail and recompute
+        settings["unit"] = base_unit
     done = resume and stage_completed(
-        spark, out_dir, stage, snapshot, require=incr_settings,
+        spark, out_dir, stage, snapshot, require=settings,
     )
     if done:
         return {"curate": {**done, "skipped": True},
@@ -961,7 +953,7 @@ def run_curation_increment(
     # pass 3). Computed BEFORE the stale-marker deletion so the re-run's
     # seq is strictly newer than its own prior attempt's.
     markers = _incr_marker_map(spark, out_dir)
-    seq = max([int(m.get("seq", 0)) for m in markers.values()] + [0]) + 1
+    seq = max(_marker_seqs(markers).values(), default=0) + 1
     # Once this run decides to recompute, the PRIOR attempt's marker must
     # go: a crash after the stale-split cleanup but before the new marker
     # would otherwise leave a completed-looking marker whose splits field
@@ -969,12 +961,145 @@ def run_curation_increment(
     # would short-circuit on it, making the loss permanent (r5 review
     # pass 3). With no marker, the retry recomputes.
     fsutil.delete(spark, _stage_path(out_dir, stage), recursive=False)
+    markers.pop(snapshot, None)
 
+    from epstein_browser_spark.dedup import CapMetrics
     from epstein_browser_spark.pipeline import extract_transcripts
 
+    caps = CapMetrics()
     extracted = extract_transcripts(
         transcripts, n_buckets=n_buckets, salt=salt, n_partitions=n_partitions
     ).localCheckpoint(eager=True)
+    if base_unit == "conversation":
+        canonical = _conv_increment(spark, extracted, out_dir, snapshot,
+                                    markers, near_threshold, caps)
+    else:
+        canonical = _turn_increment(spark, extracted, out_dir, snapshot,
+                                    near_threshold, caps)
+
+    if canonical is None:
+        # zero-doc commit (e.g. an entirely-redelivered batch): nothing to
+        # write — an empty partitioned parquet dir would crash the
+        # read-back on schema inference, and the index gains nothing. A
+        # PRIOR attempt's trees (settings-mismatch re-run) are cleared
+        # first, or their rows would stay visible under the fresh marker.
+        _delete_snapshot_trees(spark, out_dir, snapshot)
+        metrics = _mark_stage(spark, out_dir, stage, snapshot,
+                              {"n_docs": 0, "splits": {}, "seq": seq,
+                               **settings})
+        return {"curate": metrics, "elapsed_sec": time.time() - t0}
+
+    out = _annotate(canonical, redact_pii, bpe_merges=bpe_merges).drop(
+        "bucket").withColumn("snap", F.lit(snapshot)).localCheckpoint(
+        eager=True)
+    fsutil.write_partition_overwrite(
+        out, f"{out_dir}/{CURATED_INCR}", partition_col=["snap", "split"]
+    )
+    split_counts = _write_split_manifests(
+        spark, out.drop("snap"), out_dir, {"snapshot": snapshot},
+        lambda sp: f"incr-{snapshot}-{sp}.json",
+    )
+    # the dynamic overwrite only touched the splits this run produced —
+    # clear any split partition/manifest a PRIOR attempt left behind
+    _clear_stale_splits(spark, out_dir, snapshot, split_counts)
+    metrics = _mark_stage(spark, out_dir, stage, snapshot,
+                          {"n_docs": sum(split_counts.values()),
+                           "splits": split_counts, "seq": seq,
+                           **settings,
+                           "cap_metrics": caps.summary()})
+    return {"curate": metrics, "elapsed_sec": time.time() - t0}
+
+
+def _write_increment_features(feats: DataFrame, out_dir: str,
+                              snapshot: str) -> DataFrame:
+    """Persist a snapshot's near-dup feature rows under
+    ``_scratch/minhash_incr/snap=<snapshot>/`` (the index rows this
+    snapshot contributes; a retry overwrites the same partition) plus
+    their band index; returns the stored rows, read back."""
+    spark = feats.sparkSession
+    feats_dir = f"{out_dir}/{SCRATCH_INCR}"
+    fsutil.write_partition_overwrite(
+        feats.withColumn("snap", F.lit(snapshot)), feats_dir,
+        partition_col="snap",
+    )
+    stored = _snap_str(spark.read.parquet(feats_dir)).filter(
+        F.col("snap") == snapshot
+    ).drop("snap")
+    _write_band_index(stored, out_dir, snap=snapshot)
+    return stored
+
+
+def _corpus_dups(spark: SparkSession, out_dir: str, snapshot: str,
+                 feats: DataFrame, probe_bands: DataFrame,
+                 old_feats: DataFrame, near_threshold: float, caps,
+                 superseded: DataFrame | None = None) -> DataFrame:
+    """Ids (column ``id``) of the batch's ``feats`` that near-duplicate a
+    stored document: the batch's ``probe_bands`` probe the corpus side —
+    the stored band index when one exists (pruned to the probe's pband
+    partitions: O(probed buckets) instead of re-banding every stored
+    signature), else ``old_feats`` banded on the fly (an output written
+    before the index existed) — and the candidates verify on exact gram
+    jaccard against ``feats`` ∪ ``old_feats``.
+
+    ``superseded`` (column ``id``): stored ids whose rows the batch
+    REPLACES. Their stored features and band rows describe text the corpus
+    no longer holds once the batch lands, so they leave the corpus side —
+    duplicate feature rows per id would make verify_pairs score a
+    candidate against BOTH versions and keep any match (r5 review
+    finding)."""
+    if superseded is not None:
+        old_feats = old_feats.join(superseded, "id", "left_anti")
+    corpus_bands = _existing_bands(spark, out_dir, snapshot, probe_bands)
+    pairs = minhash_candidates_between(
+        probe_bands=probe_bands,  # banded ONCE — reused for pbands + join
+        corpus_sigs=(None if corpus_bands is not None
+                     else old_feats.select("id", "sig")),
+        corpus_bands=corpus_bands,
+        cap_metrics=caps,
+    )
+    if superseded is not None and corpus_bands is not None:
+        # the stored band index still holds rows for superseded ids —
+        # drop their candidate pairs here rather than letting the
+        # (inner) verify feature join eat them silently
+        pairs = pairs.join(
+            superseded.select(F.col("id").alias("id_corpus")),
+            "id_corpus", "left_anti")
+    return verify_pairs(
+        pairs, feats.unionByName(old_feats.select(feats.columns)),
+        near_threshold, n_perms=32, a_col="id_probe", b_col="id_corpus",
+        cap_metrics=caps,
+    ).select(F.col("id_probe").alias("id")).distinct()
+
+
+def _keep_canonical(survivors: DataFrame, feats: DataFrame, id_col: str,
+                    near_threshold: float, caps) -> DataFrame:
+    """The within-batch near-dup keep policy (the batch path, small
+    input): banded LSH candidates among the survivors' features → exact
+    verify → connected components → the survivor rows that are their
+    cluster's canonical."""
+    surv_feats = feats.join(
+        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
+    )
+    within = verify_pairs(
+        minhash_lsh_candidates(surv_feats.select("id", "sig"), n_bands=8,
+                               n_perms=32, cap_metrics=caps),
+        surv_feats, near_threshold, n_perms=32, cap_metrics=caps,
+    )
+    clusters = dedup_clusters(survivors, within, id_col=id_col)
+    return survivors.join(
+        clusters.filter("is_canonical").select(F.col("id").alias(id_col)),
+        id_col, "left_semi",
+    )
+
+
+def _turn_increment(spark: SparkSession, extracted: DataFrame, out_dir: str,
+                    snapshot: str, near_threshold: float,
+                    caps) -> DataFrame | None:
+    """Turn-granularity increment body (append-only: a doc the corpus
+    already holds is skipped, never replaced). Returns the canonical new
+    docs, or None when none survive. Writes the features of every
+    exact-new doc BEFORE the corpus probe (they are the probe side)."""
+    from epstein_browser_spark.dedup import band_index
 
     # quality gate + exact dedup within the increment: the SAME gate and
     # identity the base job applies (shared helper — drift here would
@@ -996,118 +1121,31 @@ def run_curation_increment(
             "doc_uid", "left_anti",
         )
     new0 = new0.localCheckpoint(eager=True)
-
     if new0.isEmpty():
-        # an entirely-redelivered batch (every doc already curated):
-        # nothing to write — an empty partitioned parquet dir would crash
-        # the read-back on schema inference, and the index gains nothing.
-        # A PRIOR attempt's trees (settings-mismatch re-run) are cleared
-        # first, or their rows would stay visible under the fresh marker.
-        _delete_snapshot_trees(spark, out_dir, snapshot)
-        metrics = _mark_stage(spark, out_dir, stage, snapshot,
-                              {"n_docs": 0, "splits": {}, "seq": seq,
-                               **incr_settings})
-        return {"curate": metrics, "elapsed_sec": time.time() - t0}
+        return None
 
-    # near-dup features for the increment → disk (they ARE the index rows
-    # this snapshot contributes; a retry overwrites the same partition)
-    feats_dir = f"{out_dir}/{SCRATCH_INCR}"
-    fsutil.write_partition_overwrite(
-        minhash_features(new0, "clean_text", "doc_uid")
-        .withColumn("snap", F.lit(snapshot)),
-        feats_dir, partition_col="snap",
-    )
-    new_feats = _snap_str(spark.read.parquet(feats_dir)).filter(
-        F.col("snap") == snapshot
-    ).drop("snap")
-    _write_band_index(new_feats, out_dir, snap=snapshot)
-
-    # increment-vs-corpus: probe old buckets, verify, drop matching new
-    # docs. The corpus side comes from the stored band index when one
-    # exists (pruned to the probe's pband partitions — O(probed buckets)
-    # instead of re-banding every stored signature); first runs against a
-    # pre-index output fall back to banding the feature table.
-    from epstein_browser_spark.dedup import CapMetrics, band_index
-
-    caps = CapMetrics()
-    probe_bands = band_index(new_feats.select("id", "sig")).localCheckpoint(
-        eager=True
-    )
-    if old_feats is None:
-        # nothing curated yet (empty base run): no corpus to probe —
-        # the increment only dedups within itself below
-        survivors = new0
-    else:
-        corpus_bands = _existing_bands(spark, out_dir, snapshot, probe_bands)
-        vs_old = minhash_candidates_between(
-            probe_bands=probe_bands,  # banded ONCE — reused for pbands + join
-            corpus_sigs=(None if corpus_bands is not None
-                         else old_feats.select("id", "sig")),
-            corpus_bands=corpus_bands,
-            cap_metrics=caps,
-        )
-        all_feats = new_feats.unionByName(old_feats)
-        dup_of_old = verify_pairs(
-            vs_old, all_feats, near_threshold, n_perms=32,
-            a_col="id_probe", b_col="id_corpus",
-            cap_metrics=caps,
-        ).select(F.col("id_probe").alias("doc_uid")).distinct()
-        survivors = new0.join(dup_of_old, "doc_uid", "left_anti")
-
-    # within-increment near-dup keep policy (the batch path, small input)
-    surv_feats = new_feats.join(
-        survivors.select(F.col("doc_uid").alias("id")), "id", "left_semi"
-    )
-    within = verify_pairs(
-        minhash_lsh_candidates(surv_feats.select("id", "sig"), n_bands=8,
-                               n_perms=32, cap_metrics=caps),
-        surv_feats, near_threshold, n_perms=32, cap_metrics=caps,
-    )
-    clusters = dedup_clusters(survivors, within, id_col="doc_uid")
-    canonical = survivors.join(
-        clusters.filter("is_canonical").select(F.col("id").alias("doc_uid")),
-        "doc_uid", "left_semi",
-    )
-
-    out = _annotate(canonical, redact_pii, bpe_merges=bpe_merges).drop("bucket").withColumn(
-        "snap", F.lit(snapshot)
-    ).localCheckpoint(eager=True)
-    fsutil.write_partition_overwrite(
-        out, f"{out_dir}/{CURATED_INCR}", partition_col=["snap", "split"]
-    )
-
-    split_counts = _write_split_manifests(
-        spark, out.drop("snap"), out_dir, {"snapshot": snapshot},
-        lambda sp: f"incr-{snapshot}-{sp}.json",
-    )
-    # the dynamic overwrite only touched the splits this run produced —
-    # clear any split partition/manifest a PRIOR attempt left behind
-    _clear_stale_splits(spark, out_dir, snapshot, split_counts)
-
-    metrics = _mark_stage(spark, out_dir, stage, snapshot,
-                          {"n_docs": sum(split_counts.values()),
-                           "splits": split_counts, "seq": seq,
-                           **incr_settings,
-                           "cap_metrics": caps.summary()})
-    return {"curate": metrics, "elapsed_sec": time.time() - t0}
+    new_feats = _write_increment_features(
+        minhash_features(new0, "clean_text", "doc_uid"), out_dir, snapshot)
+    survivors = new0
+    if old_feats is not None:
+        # (with nothing curated yet — empty base run — there is no corpus
+        # to probe: the increment only dedups within itself)
+        probe_bands = band_index(new_feats.select("id", "sig")
+                                 ).localCheckpoint(eager=True)
+        dups = _corpus_dups(spark, out_dir, snapshot, new_feats, probe_bands,
+                            old_feats, near_threshold, caps)
+        survivors = new0.join(dups.withColumnRenamed("id", "doc_uid"),
+                              "doc_uid", "left_anti")
+    return _keep_canonical(survivors, new_feats, "doc_uid", near_threshold,
+                           caps)
 
 
-def _run_conv_increment(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    snapshot: str,
-    *,
-    n_buckets: int,
-    salt: int,
-    n_partitions: int | None,
-    near_threshold: float,
-    redact_pii: bool,
-    resume: bool,
-    bpe_merges: list | None,
-    t0: float,
-) -> dict:
-    """Conversation-granularity incremental ingest (VERDICT r4 item 3).
+def _conv_increment(spark: SparkSession, extracted: DataFrame, out_dir: str,
+                    snapshot: str, markers: dict[str, dict],
+                    near_threshold: float, caps) -> DataFrame | None:
+    """Conversation-granularity increment body (VERDICT r4 item 3).
+    Returns every turn of the conversations to install, or None when none
+    is installed.
 
     Differences from the turn path, forced by the unit: a conversation is
     a MUTABLE document (it grows as turns arrive), so redelivery means
@@ -1123,12 +1161,12 @@ def _run_conv_increment(
        UNCHANGED are dropped (pure redelivery — idempotent no-op);
     3. changed/new conversations run the base job's exact keep rule
        (conversation_exact_kept) within the batch, then probe the band
-       index against the corpus — with SELF-pairs excluded (an extended
-       conversation always near-matches its own previous version; that
-       collision is the replacement, not a duplicate) and the corpus
-       feature side resolved to each conversation's LATEST signature
-       (_existing_features_latest) — then the normal within-batch
-       near-dup CC keep policy;
+       index against the corpus — with the batch's own ids SUPERSEDED on
+       the corpus side (an extended conversation always near-matches its
+       own previous version; that collision is the replacement, not a
+       duplicate) and the corpus feature side resolved to each
+       conversation's LATEST signature (_existing_features_latest) — then
+       the normal within-batch near-dup CC keep policy;
     4. kept conversations land WHOLE (all turns, re-annotated) under
        ``curated_incr/snap=<snapshot>/``, and their feature/band rows
        under the same snapshot; readers and future increments see them
@@ -1148,37 +1186,8 @@ def _run_conv_increment(
     turn path's old-doc-wins rule)."""
     from pyspark.sql import Window
 
-    stage = f"incr-{snapshot}"
-    token_counter = "bpe" if bpe_merges is not None else "whitespace"
-    incr_settings = {"token_counter": token_counter,
-                     "redact_pii": redact_pii,
-                     "near_threshold": near_threshold,
-                     "unit": "conversation"}
-    done = resume and stage_completed(
-        spark, out_dir, stage, snapshot, require=incr_settings,
-    )
-    if done:
-        return {"curate": {**done, "skipped": True},
-                "elapsed_sec": time.time() - t0}
+    from epstein_browser_spark.dedup import band_index
 
-    markers = _incr_marker_map(spark, out_dir)
-    seq = max([int(m.get("seq", 0)) for m in markers.values()] + [0]) + 1
-    # once recomputing, the prior attempt's marker goes (see the turn
-    # path): a crash between the stale-split cleanup and the new marker
-    # must leave the snapshot UNcommitted, not committed-with-old-splits
-    fsutil.delete(spark, _stage_path(out_dir, stage), recursive=False)
-    markers.pop(snapshot, None)
-
-    from epstein_browser_spark.dedup import (
-        CapMetrics,
-        band_index,
-    )
-    from epstein_browser_spark.pipeline import extract_transcripts
-
-    caps = CapMetrics()
-    extracted = extract_transcripts(
-        transcripts, n_buckets=n_buckets, salt=salt, n_partitions=n_partitions
-    ).localCheckpoint(eager=True)
     new_turns = _gated_unique_turns(extracted)
 
     # re-form redelivered conversations: stored turns of affected convs
@@ -1225,11 +1234,7 @@ def _run_conv_increment(
         ).drop("_old_key")
     changed = convs.localCheckpoint(eager=True)
     if changed.isEmpty():
-        _delete_snapshot_trees(spark, out_dir, snapshot)
-        metrics = _mark_stage(spark, out_dir, stage, snapshot,
-                              {"n_docs": 0, "splits": {}, "seq": seq,
-                               **incr_settings})
-        return {"curate": metrics, "elapsed_sec": time.time() - t0}
+        return None
 
     # the base job's exact keep rule within the batch of candidates
     conv_kept = conversation_exact_kept(changed)
@@ -1240,51 +1245,23 @@ def _run_conv_increment(
     probe_bands = band_index(cand_feats.select("id", "sig")).localCheckpoint(
         eager=True)
 
-    old_feats = _existing_features_latest(spark, out_dir,
-                                          exclude_snap=snapshot,
-                                          markers=markers)
-    stored_feats = old_feats
-    if old_feats is not None:
-        # corpus side = stored conversations NOT replaced by this batch.
-        # A redelivered conversation's stored signature/grams describe
-        # SUPERSEDED text: cand_feats carries the same id with the new
-        # grams, and duplicate feature rows per id made verify_pairs
-        # score every candidate pair against BOTH versions, keeping any
-        # match — a batch member could be dropped for near-matching text
-        # the corpus no longer holds (r5 review finding). Exact
-        # self-pairs were never the issue (minhash_candidates_between
-        # drops them internally); the stale ROWS were. Batch-vs-batch
-        # similarity belongs to the within-batch CC pass below, where
-        # the keep policy elects a canonical instead of dropping both.
-        # stored_feats keeps the unfiltered view for the refinement pass
-        # after the keep policy (a replacement that is NOT installed
-        # leaves its old text current — see below).
-        old_feats = old_feats.join(
-            cand_feats.select("id"), "id", "left_anti")
-    if old_feats is None:
-        survivors = conv_kept
-    else:
-        corpus_bands = _existing_bands(spark, out_dir, snapshot, probe_bands)
-        vs_old = minhash_candidates_between(
-            probe_bands=probe_bands,
-            corpus_sigs=(None if corpus_bands is not None
-                         else old_feats.select("id", "sig")),
-            corpus_bands=corpus_bands,
-            cap_metrics=caps,
-        )
-        if corpus_bands is not None:
-            # the stored band index still holds rows for replaced ids —
-            # drop their candidate pairs here rather than letting the
-            # (inner) verify feature join eat them silently
-            vs_old = vs_old.join(
-                cand_feats.select(F.col("id").alias("id_corpus")),
-                "id_corpus", "left_anti")
-        all_feats = cand_feats.unionByName(old_feats.select(cand_feats.columns))
-        dup_of_old = verify_pairs(
-            vs_old, all_feats, near_threshold, n_perms=32,
-            a_col="id_probe", b_col="id_corpus", cap_metrics=caps,
-        ).select(F.col("id_probe").alias("conv_uid")).distinct()
-        survivors = conv_kept.join(dup_of_old, "conv_uid", "left_anti")
+    # corpus side = stored conversations NOT replaced by this batch (a
+    # redelivered conversation's stored signature/grams describe
+    # SUPERSEDED text; batch-vs-batch similarity belongs to the
+    # within-batch CC pass below, where the keep policy elects a
+    # canonical instead of dropping both). stored_feats keeps the
+    # unfiltered view for the refinement pass after the keep policy (a
+    # replacement that is NOT installed leaves its old text current).
+    stored_feats = _existing_features_latest(spark, out_dir,
+                                             exclude_snap=snapshot,
+                                             markers=markers)
+    survivors = conv_kept
+    if stored_feats is not None:
+        dups = _corpus_dups(spark, out_dir, snapshot, cand_feats,
+                            probe_bands, stored_feats, near_threshold, caps,
+                            superseded=cand_feats.select("id"))
+        survivors = conv_kept.join(dups.withColumnRenamed("id", "conv_uid"),
+                                   "conv_uid", "left_anti")
 
     # Within-batch near-dup keep policy (same as the base conversation
     # run), UNIFIED with the refinement against stored text of
@@ -1309,19 +1286,8 @@ def _run_conv_increment(
             replaced = None
     survivors = survivors.localCheckpoint(eager=True)
     while True:
-        surv_feats = cand_feats.join(
-            survivors.select(F.col("conv_uid").alias("id")), "id",
-            "left_semi")
-        within = verify_pairs(
-            minhash_lsh_candidates(surv_feats.select("id", "sig"), n_bands=8,
-                                   n_perms=32, cap_metrics=caps),
-            surv_feats, near_threshold, n_perms=32, cap_metrics=caps,
-        )
-        clusters = dedup_clusters(survivors, within, id_col="conv_uid")
-        kept_convs = survivors.join(
-            clusters.filter("is_canonical").select(
-                F.col("id").alias("conv_uid")),
-            "conv_uid", "left_semi",
+        kept_convs = _keep_canonical(
+            survivors, cand_feats, "conv_uid", near_threshold, caps,
         ).select("conv_id", "conv_uid").localCheckpoint(eager=True)
         if replaced is None or kept_convs.isEmpty():
             break
@@ -1355,50 +1321,17 @@ def _run_conv_increment(
             drops, "conv_uid", "left_anti").localCheckpoint(eager=True)
 
     if kept_convs.isEmpty():
-        _delete_snapshot_trees(spark, out_dir, snapshot)
-        metrics = _mark_stage(spark, out_dir, stage, snapshot,
-                              {"n_docs": 0, "splits": {}, "seq": seq,
-                               **incr_settings})
-        return {"curate": metrics, "elapsed_sec": time.time() - t0}
-
-    # kept conversations land WHOLE: every combined turn, re-annotated
-    kept_turns = combined.join(kept_convs.select("conv_id"),
-                               "conv_id", "left_semi")
-    out = _annotate(kept_turns, redact_pii, bpe_merges=bpe_merges).drop(
-        "bucket").withColumn("snap", F.lit(snapshot)).localCheckpoint(
-        eager=True)
-    fsutil.write_partition_overwrite(
-        out, f"{out_dir}/{CURATED_INCR}", partition_col=["snap", "split"]
-    )
-
+        return None
     # features/bands for exactly the INSTALLED conversations (persisting
     # a dropped replacement's signature would desynchronize the index
     # from the text the corpus actually kept)
-    kept_feats = cand_feats.join(
-        kept_convs.select(F.col("conv_uid").alias("id")), "id", "left_semi"
-    )
-    fsutil.write_partition_overwrite(
-        kept_feats.withColumn("snap", F.lit(snapshot)),
-        f"{out_dir}/{SCRATCH_INCR}", partition_col="snap",
-    )
-    new_feats = _snap_str(
-        spark.read.parquet(f"{out_dir}/{SCRATCH_INCR}")
-    ).filter(F.col("snap") == snapshot).drop("snap")
-    _write_band_index(new_feats, out_dir, snap=snapshot)
-
-    split_counts = _write_split_manifests(
-        spark, out.drop("snap"), out_dir, {"snapshot": snapshot},
-        lambda sp: f"incr-{snapshot}-{sp}.json",
-    )
-    # the dynamic overwrite only touched the splits this run produced —
-    # clear any split partition/manifest a PRIOR attempt left behind
-    _clear_stale_splits(spark, out_dir, snapshot, split_counts)
-    metrics = _mark_stage(spark, out_dir, stage, snapshot,
-                          {"n_docs": sum(split_counts.values()),
-                           "splits": split_counts, "seq": seq,
-                           **incr_settings,
-                           "cap_metrics": caps.summary()})
-    return {"curate": metrics, "elapsed_sec": time.time() - t0}
+    _write_increment_features(
+        cand_feats.join(kept_convs.select(F.col("conv_uid").alias("id")),
+                        "id", "left_semi"),
+        out_dir, snapshot)
+    # kept conversations land WHOLE: every combined turn, re-annotated
+    return combined.join(kept_convs.select("conv_id"), "conv_id",
+                         "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -1658,6 +1591,7 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
     # the increment retry (which overwrites its own partitions).
     markers = _incr_marker_map(spark, out_dir)
     marker_docs = {s: int(m.get("n_docs", 0)) for s, m in markers.items()}
+    marker_seqs = _marker_seqs(markers)
     unit = _base_unit(spark, out_dir)
 
     # PROMOTE-INTENT protocol (r5 review finding — conversation-mode
@@ -1693,12 +1627,12 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
         fold = sorted(
             s for s in seqs
             if s not in markers
-            or int(markers[s].get("seq", 0)) == seqs[s]
+            or marker_seqs[s] == seqs[s]
         )
         phases = set(intent.get("phases", []))
     else:
         fold = sorted(s for s in marker_docs if s in tree_snaps)
-        seqs = {s: int(markers[s].get("seq", 0)) for s in fold}
+        seqs = {s: marker_seqs[s] for s in fold}
         phases = set()
 
     def _write_intent():
@@ -1706,13 +1640,6 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
         fsutil.write_text(spark, intent_path, json.dumps(
             {"fold": seqs, "phases": sorted(phases)}))
 
-    def _seq_df(snaps):
-        """(snap, _seq) for the folding snapshots — conversation-mode
-        replacement resolution (highest seq wins a conv_id / feature id)."""
-        return spark.createDataFrame(
-            [(s, seqs.get(s, 0)) for s in snaps],
-            "snap string, _seq int",
-        )
     # markers to clear. Under an intent retry: ONLY the retry's own fold
     # set — a marker outside it belongs to an increment that completed
     # (or re-ran) after the crash; clearing it would make its unfolded
@@ -1756,31 +1683,15 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
         )).filter(F.col("snap").isin(cur_fold))
         base = _read_curated_base(spark, out_dir)
         if unit == "conversation":
-            # replacement semantics: among the folding snapshots the
-            # highest-seq delivery of a conv_id wins, and it SUPERSEDES
-            # the base rows of that conversation (the read-time shadow
-            # of _conv_visible_curated, materialized once here)
-            incr_curated = incr_curated.join(
-                F.broadcast(_seq_df(cur_fold)), "snap")
-            win = incr_curated.groupBy("conv_id").agg(
-                F.max("_seq").alias("_wseq"))
-            winners = (incr_curated.join(F.broadcast(win), "conv_id")
-                       .filter(F.col("_seq") == F.col("_wseq"))
-                       .drop("_seq", "_wseq", "snap"))
-            docs_folded = winners.count()
-            if base is not None:
-                base = base.join(
-                    F.broadcast(incr_curated.select("conv_id").distinct()),
-                    "conv_id", "left_anti")
-            merged = (winners if base is None
-                      else base.unionByName(winners,
-                                            allowMissingColumns=True))
+            # replacement semantics: the read-time shadow of
+            # _conv_visible_curated, materialized once here
+            cur_seqs = {s: seqs[s] for s in cur_fold}
+            docs_folded = _supersede(incr_curated, "conv_id",
+                                     cur_seqs).count()
+            merged = _supersede(incr_curated, "conv_id", cur_seqs, base)
         else:
-            incr_curated = incr_curated.drop("snap")
             docs_folded = incr_curated.count()
-            merged = (incr_curated if base is None
-                      else base.unionByName(incr_curated,
-                                            allowMissingColumns=True))
+            merged = _union_snaps(base, incr_curated)
         new_path = _install_curated_version(
             spark, out_dir, merged.dropDuplicates(["doc_uid"]))
         if new_path:
@@ -1803,25 +1714,12 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
         )).filter(F.col("snap").isin(feat_fold))
         base_feats = _read_optional(spark, feats_live)
         if unit == "conversation":
-            from pyspark.sql import Window as _W
-
-            incr_feats = incr_feats.join(
-                F.broadcast(_seq_df(feat_fold)), "snap")
-            w = _W.partitionBy("id").orderBy(F.desc("_seq"))
-            incr_feats = (incr_feats.withColumn("_rn",
-                                                F.row_number().over(w))
-                          .filter(F.col("_rn") == 1)
-                          .drop("_rn", "_seq", "snap"))
-            if base_feats is not None:
-                base_feats = base_feats.join(
-                    F.broadcast(incr_feats.select("id").distinct()),
-                    "id", "left_anti")
+            merged_feats = _supersede(incr_feats, "id",
+                                      {s: seqs[s] for s in feat_fold},
+                                      base_feats)
         else:
-            incr_feats = incr_feats.drop("snap")
-        merged_feats = (
-            incr_feats if base_feats is None
-            else base_feats.unionByName(incr_feats.select(base_feats.columns))
-        ).dropDuplicates(["id"])
+            merged_feats = _union_snaps(base_feats, incr_feats)
+        merged_feats = merged_feats.dropDuplicates(["id"])
         merged_feats.write.mode("overwrite").parquet(f"{feats_live}__tmp")
         _swap_dir(spark, feats_live, f"{feats_live}__old",
                   f"{feats_live}__tmp")
@@ -1846,6 +1744,7 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
     if band_fold:
         bands = _snap_str(spark.read.parquet(bands_live))
         fold_set = set(band_fold) | {"base"}
+        band_cols = ["id", "band", "band_hash", "pband"]
         if unit == "conversation":
             # replacement semantics for band rows too: a re-signed
             # conversation's OLD band rows (base, or a lower-seq snap)
@@ -1854,29 +1753,16 @@ def promote_increments(spark: SparkSession, out_dir: str) -> dict:
             # accrete dead probe rows forever. Keep, per id, only the
             # winning snapshot's rows; base rows survive for ids no
             # folding snapshot re-signed.
-            fold_bands = bands.filter(
-                F.col("snap").isin(sorted(band_fold))
-            ).join(F.broadcast(_seq_df(band_fold)), "snap")
-            winb = fold_bands.groupBy("id").agg(
-                F.max("_seq").alias("_wseq"))
-            fold_bands = (fold_bands.join(F.broadcast(winb), "id")
-                          .filter(F.col("_seq") == F.col("_wseq"))
-                          .select("id", "band", "band_hash", "pband"))
-            base_bands = bands.filter(F.col("snap") == "base").join(
-                F.broadcast(winb.select("id")), "id", "left_anti"
-            ).select("id", "band", "band_hash", "pband")
-            folded = (
-                base_bands.unionByName(fold_bands)
-                .dropDuplicates(["id", "band", "band_hash"])
-                .withColumn("snap", F.lit("base"))
-            )
+            folded = _supersede(
+                bands, "id", {s: seqs[s] for s in band_fold},
+                bands.filter(F.col("snap") == "base").select(band_cols))
         else:
-            folded = (
-                bands.filter(F.col("snap").isin(sorted(fold_set)))
-                .select("id", "band", "band_hash", "pband")
-                .dropDuplicates(["id", "band", "band_hash"])
-                .withColumn("snap", F.lit("base"))
-            )
+            folded = bands.filter(F.col("snap").isin(sorted(fold_set)))
+        folded = (
+            folded.select(band_cols)
+            .dropDuplicates(["id", "band", "band_hash"])
+            .withColumn("snap", F.lit("base"))
+        )
         passthrough = bands.filter(
             ~F.col("snap").isin(sorted(fold_set))
         ).select("id", "band", "band_hash", "pband", "snap")

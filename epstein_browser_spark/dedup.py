@@ -196,41 +196,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_perms: int = 32,
-                       n: int = 5) -> DataFrame:
-    """(id, sig: array<long>) — MinHash over char n-gram shingles.
-
-    Shape: explode shingles → ONE xxhash64 of the shingle string → n_perms
-    re-hashes of that 8-byte base value (xxhash64(h, i) — fixed-width
-    input, so each permutation costs a constant ~10ns instead of
-    re-scanning the whole shingle string as r1's xxhash64(shingle, i)
-    did) → n_perms plain min aggregates → assemble the signature array.
-    Flat aggregates stay inside whole-stage codegen with
-    map-side partial aggregation (the shuffle carries one n_perms-wide row
-    per doc per partition, NOT the exploded shingles). This beats the
-    nested higher-order-function formulation by an order of magnitude:
-    lambda-based transforms are interpreted, not codegen'd, and
-    re-materialize the shingle array per permutation.
-    """
-    # distinct=False: per-permutation min() is duplicate-insensitive, so
-    # the corpus-wide (id, shingle) dedup exchange is pure overhead (see
-    # minhash_features)
-    ex = exploded_shingles(spread(df), text_col, id_col, n,
-                           distinct=False).select(
-        "id", F.xxhash64("_sh").alias("_h")
-    )
-    aggs = [
-        F.min(F.xxhash64("_h", F.lit(i))).alias(f"_h{i}")
-        for i in range(n_perms)
-    ]
-    return (
-        ex.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[f"_h{i}" for i in range(n_perms)]).alias("sig"))
-    )
-
-
 def _check_band_split(n_perms: int, n_bands: int) -> None:
     """Banding slices the signature into n_bands equal windows of
     n_perms // n_bands values; a non-divisible split would silently drop
@@ -594,8 +559,14 @@ def minhash_features(df: DataFrame, text_col: str = "text",
                            distinct=False).withColumn(
         "_h", F.xxhash64("_sh")
     )
-    # base-hash once per shingle; per-permutation re-hash is fixed-width
-    # (see minhash_signatures)
+    # base-hash once per shingle, then n_perms re-hashes of that 8-byte
+    # value (xxhash64(h, i) — fixed-width input, so each permutation
+    # costs a constant ~10ns instead of re-scanning the whole shingle
+    # string as r1's xxhash64(shingle, i) did); flat min aggregates stay
+    # inside whole-stage codegen with map-side partial aggregation, an
+    # order of magnitude faster than a higher-order-function formulation
+    # (lambdas are interpreted and re-materialize the shingle array per
+    # permutation)
     sig_aggs = [
         F.min(F.xxhash64("_h", F.lit(i))).alias(f"_h{i}")
         for i in range(n_perms)
@@ -791,7 +762,7 @@ def simhash_table(df: DataFrame, text_col: str = "text",
                   hash_mode: str = "xxhash") -> DataFrame:
     """(id, sh: 64-char bit string) — SimHash over char n-gram shingles.
 
-    Same explode + flat-codegen-aggregate shape as minhash_signatures:
+    Same explode + flat-codegen-aggregate shape as minhash_features:
     per bit b, counter = sum over shingles of ±1 by hash bit (literal masks,
     sign bit via h < 0); output bit b is '1' iff counter > 0. Bit strings
     avoid column-amount shift ops (Spark requires literal shift counts).

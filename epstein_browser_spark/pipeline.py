@@ -48,6 +48,7 @@ import json
 import re
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,16 +143,18 @@ def extract_transcripts(
         df.sortWithinPartitions("conv_id", "turn_idx")
         .mapInPandas(extract_map_in_pandas, schema=EXTRACT_SCHEMA)
     )
-    return finish_extracted(out, n_buckets)
+    # bucket recomputed on the JVM side (deterministic from conv_id —
+    # cheaper than shipping it through Arrow)
+    return with_bucket(finish_extracted(out), n_buckets)
 
 
-def finish_extracted(out: DataFrame, n_buckets: int) -> DataFrame:
+def finish_extracted(out: DataFrame) -> DataFrame:
     """THE JVM-side finisher block — rebuild ts from epoch micros, zip the
-    flat span arrays into structs, recompute bucket (deterministic from
-    conv_id — cheaper than shipping via Arrow), md5 content hash — shared
-    by batch (extract_transcripts) and stream (streaming.extract_stream):
-    a drifted copy of the content_hash definition would silently corrupt
-    dedup/upsert semantics across the two paths (r4 review)."""
+    flat span arrays into structs, md5 content hash — shared by batch
+    (extract_transcripts), grouped (extract_conversations_grouped) and
+    stream (streaming.extract_stream): a drifted copy of the content_hash
+    definition would silently corrupt dedup/upsert semantics across the
+    paths (r4 review). The bucketed callers add ``bucket`` themselves."""
     out = (
         out.withColumn("ts", F.timestamp_micros("ts_us"))
         .drop("ts_us")
@@ -165,7 +168,6 @@ def finish_extracted(out: DataFrame, n_buckets: int) -> DataFrame:
         )
         .drop("span_starts", "span_ends", "span_kinds")
     )
-    out = with_bucket(out, n_buckets)
     return out.withColumn("content_hash", F.md5(F.coalesce("clean_text", F.lit(""))))
 
 
@@ -191,23 +193,9 @@ def extract_conversations_grouped(df: DataFrame) -> DataFrame:
         return out
 
     df = df.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
-    out = df.groupBy("conv_id").applyInPandas(
+    return finish_extracted(df.groupBy("conv_id").applyInPandas(
         _per_conv, schema=EXTRACT_SCHEMA + ", conv_turns int"
-    )
-    out = (
-        out.withColumn("ts", F.timestamp_micros("ts_us"))
-        .drop("ts_us")
-        .withColumn(
-            "spans",
-            F.arrays_zip(
-                F.col("span_starts").alias("start"),
-                F.col("span_ends").alias("end"),
-                F.col("span_kinds").alias("kind"),
-            ).cast("array<struct<start:int,end:int,kind:string>>"),
-        )
-        .drop("span_starts", "span_ends", "span_kinds")
-    )
-    return out.withColumn("content_hash", F.md5(F.coalesce("clean_text", F.lit(""))))
+    ))
 
 
 def failures_table(extracted: DataFrame) -> DataFrame:
@@ -340,7 +328,8 @@ def completed_buckets(
     change detection (/root/reference/index_images.py:344-352).
     When ``n_buckets`` is given, only manifests of that bucket count count:
     bucket N of another layout holds different conversations, so skipping
-    it would drop or duplicate rows.
+    it would drop or duplicate rows. A manifest that cannot be read or
+    parsed (partial, or failing its ``.crc`` checksum) does not count.
 
     Reads through the Hadoop FS API (same storage the data writes target —
     hdfs:///s3a:// out_dirs resume correctly, ADVICE r1); falls back to the
@@ -355,7 +344,17 @@ def completed_buckets(
     for name in fsutil.list_names(spark, mdir):
         if name.startswith("bucket-") and name.endswith(".json"):
             try:
-                m = json.loads(fsutil.read_text(spark, f"{mdir}/{name}") or "")
+                raw = fsutil.read_text(spark, f"{mdir}/{name}")
+            except Py4JJavaError as e:
+                # bytes that disagree with their .crc sidecar: unreadable
+                # like a partial manifest, so the bucket is recomputed
+                # and its manifest rewritten
+                if (e.java_exception.getClass().getName()
+                        != "org.apache.hadoop.fs.ChecksumException"):
+                    raise
+                continue
+            try:
+                m = json.loads(raw or "")
                 if (
                     m.get("status") == "completed"
                     and m.get("bucket_fn") == BUCKET_FN

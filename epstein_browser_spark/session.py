@@ -22,6 +22,8 @@ def get_spark(
     On a real cluster pass the cluster master / rely on spark-submit.
     ``shuffle_partitions`` defaults to the parallelism Spark itself reports
     for the master; ``extra_conf`` overrides any setting, this one included.
+    The driver heap is ``$SPARK_DRIVER_MEM`` when set (the deployment
+    override), else :func:`_default_driver_memory`.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -59,7 +61,8 @@ def get_spark(
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
     )
     if shuffle_partitions is not None:
         b = b.config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
@@ -71,6 +74,16 @@ def get_spark(
                        str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, in MiB. The heap grows to its
+    maximum before GC pressure starts, so a maximum above what the host
+    has gets the JVM killed by the OS instead (a fixed 24g did so on a
+    16 GB host); the other half is left for the JVM's off-heap memory,
+    the Python workers and a second JVM (spark-submit)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 >> 20}m"
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from epstein_browser_spark.pipeline import TRANSCRIPTS_SCHEMA, with_bucket
+from epstein_browser_spark.pipeline import (
+    TRANSCRIPTS_SCHEMA,
+    finish_extracted,
+    with_bucket,
+)
 from epstein_browser_spark.sketches import hll_register_cols
 from epstein_browser_spark.udfs import EXTRACT_SCHEMA, extract_map_in_pandas
 
@@ -46,13 +50,11 @@ def extract_stream(stream_df: DataFrame, n_buckets: int = 32) -> DataFrame:
     DataFrames can't repartition-by-column mid-stream the same way, so the
     micro-batch is extracted as-read; bucket assignment still happens for
     layout."""
-    from epstein_browser_spark.pipeline import finish_extracted
-
     df = stream_df.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
     out = df.mapInPandas(extract_map_in_pandas, schema=EXTRACT_SCHEMA)
     # the SAME finisher block as batch extract_transcripts — content_hash
     # etc. cannot drift between the two paths
-    return finish_extracted(out, n_buckets)
+    return with_bucket(finish_extracted(out), n_buckets)
 
 
 def start_extraction_stream(

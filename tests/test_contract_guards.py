@@ -46,3 +46,18 @@ def test_session_default_shuffle_partitions(spark):
                          extra_conf={key: "6"}).conf.get(key) == "6"
     finally:
         spark.conf.set(key, "4")
+
+
+def test_session_driver_heap_fits_the_host(spark):
+    """The default driver heap is derived from the host's physical memory
+    (a fixed default above it got the JVM killed by the OS);
+    ``SPARK_DRIVER_MEM`` stays the deployment override."""
+    import os
+
+    from epstein_browser_spark import session
+
+    phys_mib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    default = session._default_driver_memory()
+    assert default.endswith("m") and 0 < int(default[:-1]) < phys_mib
+    if "SPARK_DRIVER_MEM" not in os.environ:
+        assert spark.sparkContext.getConf().get("spark.driver.memory") == default

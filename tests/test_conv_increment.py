@@ -5,6 +5,8 @@ conversation granularity; the increment matches a batch recurate of the
 combined raw turns; promote folds the replacement semantics into one
 table."""
 
+import json
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -227,3 +229,55 @@ def test_conv_increment_half_commit_invisible(spark, conv_base):
         spark, _sdf(spark, _incr_rows()), out, snapshot="i1", n_buckets=2)
     assert m2["curate"]["n_docs"] == n_docs
     assert curation.read_curated(spark, out).count() == n_vis
+
+
+def test_increment_record_keys(spark, tmp_path, conv_base):
+    """Pins the records both units' increments write and return: the
+    ``incr-<snap>.json`` marker (turn markers carry no ``unit`` key — adding
+    one would make every stored turn increment recompute on resume), the
+    ``incr-<snap>-<split>.json`` manifests, the zero-doc commit's marker,
+    and the base-run metrics that perfbench reads."""
+    stage_keys = {"stage", "status", "input_snapshot", "n_docs", "splits",
+                  "seq", "token_counter", "redact_pii", "near_threshold"}
+    manifest_keys = {"split", "snapshot", "n_docs", "n_convs",
+                     "total_tokens", "total_chars", "languages"}
+
+    def check(out, snap, m, keys):
+        assert set(m) == {"curate", "elapsed_sec"}
+        assert set(m["curate"]) == keys
+        stages = tmp_path / out / "_stages"
+        assert set(json.loads((stages / f"incr-{snap}.json").read_text())) \
+            == keys
+        manifests = sorted((tmp_path / out / "manifests").glob(
+            f"incr-{snap}-*.json"))
+        assert [p.name for p in manifests] == [
+            f"incr-{snap}-{sp}.json" for sp in sorted(m["curate"]["splits"])]
+        for p in manifests:
+            assert set(json.loads(p.read_text())) == manifest_keys
+
+    # conversation unit, against the base run
+    base = json.loads((tmp_path / "convbase" / "_stages" / "curate.json")
+                      .read_text())
+    assert {"n_docs", "cap_metrics", "stage_sec"} <= set(base)
+    assert set(base["stage_sec"]) == {
+        "dedup_pairs_cc", "band_index", "gate_stats_materialize",
+        "write_manifests"}
+    m = curation.run_curation_increment(
+        spark, _sdf(spark, _rows("d", D_NOVEL)), conv_base, snapshot="c1",
+        n_buckets=2)
+    assert m["curate"]["n_docs"] > 0
+    check("convbase", "c1", m, stage_keys | {"unit", "cap_metrics"})
+
+    # turn unit (an output with no base run is turn-mode), then the same
+    # batch again under a new snapshot: the zero-doc commit
+    out = str(tmp_path / "turn")
+    m = curation.run_curation_increment(
+        spark, _sdf(spark, _rows("d", D_NOVEL)), out, snapshot="t1",
+        n_buckets=2)
+    assert m["curate"]["n_docs"] > 0
+    check("turn", "t1", m, stage_keys | {"cap_metrics"})
+    z = curation.run_curation_increment(
+        spark, _sdf(spark, _rows("d", D_NOVEL)), out, snapshot="t2",
+        n_buckets=2)
+    assert z["curate"]["n_docs"] == 0
+    check("turn", "t2", z, stage_keys)

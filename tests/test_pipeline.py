@@ -209,6 +209,25 @@ def test_manifest_without_layout_fields_is_not_completed(spark, corpus_sdf,
     assert spark.read.parquet(out + "/data").count() == corpus_sdf.count()
 
 
+def test_manifest_failing_its_checksum_is_recomputed(spark, corpus_sdf,
+                                                     tmp_path):
+    """A manifest whose bytes disagree with its Hadoop ``.crc`` sidecar
+    (rewritten with plain file I/O) is unreadable like a partial one:
+    resume recomputes its bucket and rewrites the manifest instead of
+    aborting on the checksum error."""
+    out = str(tmp_path / "badcrc")
+    run_extraction(spark, corpus_sdf, out, n_buckets=4)
+    path = os.path.join(out, "_manifests", "bucket-00001.json")
+    m = json.load(open(path))
+    with open(path, "w") as f:  # the stale .crc stays behind
+        json.dump(m, f, indent=2)
+    res = run_extraction(spark, corpus_sdf, out, n_buckets=4, resume=True)
+    assert (res["buckets_completed"], res["buckets_skipped"]) == (1, 3)
+    spark.catalog.refreshByPath(out + "/data")
+    assert spark.read.parquet(out + "/data").count() == corpus_sdf.count()
+    assert completed_buckets(out, n_buckets=4) == {0, 1, 2, 3}
+
+
 def test_prebucketed_input_is_shuffle_free(spark, corpus_sdf, tmp_path):
     """Iceberg-layout read path: input already bucketed by conv_id →
     assume_partitioned skips the repartition, the plan has NO Exchange,

@@ -13,8 +13,8 @@ from epstein_browser_spark import curation
 from epstein_browser_spark.dedup import (
     CapMetrics,
     minhash_dedup_pairs,
+    minhash_features,
     minhash_lsh_candidates,
-    minhash_signatures,
 )
 from epstein_browser_spark.joins import range_join_binned
 from epstein_browser_spark.pipeline import extract_transcripts
@@ -126,8 +126,8 @@ def test_band_split_divisibility_raises(spark, corpus_sdf):
     with pytest.raises(ValueError, match="not divisible"):
         minhash_dedup_pairs(docs, text_col="text", id_col="conv_id",
                             n_perms=32, n_bands=5)
-    sigs = minhash_signatures(docs, text_col="text", id_col="conv_id",
-                              n_perms=16)
+    sigs = minhash_features(docs, text_col="text", id_col="conv_id",
+                            n_perms=16).select("id", "sig")
     with pytest.raises(ValueError, match="not divisible"):
         minhash_lsh_candidates(sigs, n_bands=3, n_perms=16)
 
@@ -194,7 +194,7 @@ def test_cap_metrics_direct_operator(spark):
     })
     df = spark.createDataFrame(pdf)
     caps = CapMetrics()
-    sigs = minhash_signatures(df, n_perms=32)
+    sigs = minhash_features(df, n_perms=32).select("id", "sig")
     cands = minhash_lsh_candidates(sigs, n_bands=8, max_bucket=2,
                                    n_perms=32, cap_metrics=caps)
     assert cands.count() == 0  # every bucket over-cap -> no candidates
